@@ -27,7 +27,9 @@ manifest-tracked write.
 from __future__ import annotations
 
 import hashlib
+from contextlib import contextmanager
 from dataclasses import dataclass
+from typing import Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -365,14 +367,52 @@ def construct_kg(
 ) -> DataFrame:
     """Full construction plan; returns the (deduplicated) quad DataFrame.
 
-    Action discipline: exactly ONE Spark action runs in here — a bounded
-    ``take`` of the distinct alias pairs (tiny: bounded by the alias
-    vocabulary, not the corpus). That single job also materializes the
-    mentions and linked caches as a side effect, so the caller's write
-    job is the only other action. Job-submission barriers are pure serial
-    time (they were ~half the wall at 500k rows before this restructure),
-    so the count is part of the design, not an accident.
+    Action discipline: one Spark action runs in here when
+    ``canonicalize`` is set (none otherwise) — a bounded ``take`` of the
+    distinct alias pairs (tiny: bounded by the alias vocabulary, not the
+    corpus). It also materializes the mentions and linked caches as a
+    side effect, so the caller's write is the only other action. Spark
+    runs that one action as several jobs: adaptive execution submits
+    each shuffle stage of the ``take``'s plan as its own job, and ``take``
+    may scan further partitions in follow-up jobs (8 jobs for a
+    40,000-row table at ``local[3]``). An alias-pair set over
+    ``PAIRS_DRIVER_THRESHOLD`` adds the distributed connected-components
+    rounds (canon.canonical_mapping). Job-submission barriers are pure
+    serial time (they were ~half the wall at 500k rows before this
+    restructure), so the count is part of the design, not an accident.
+
+    The three staged ``DISK_ONLY`` caches stay persisted after the call
+    and belong to the caller; :func:`constructed` releases them.
     """
+    return _construct(spark, files, graph_uri, canonicalize, include_schema)[0]
+
+
+@contextmanager
+def constructed(
+    spark: SparkSession,
+    files: DataFrame,
+    graph_uri: str = DEFAULT_GRAPH,
+    canonicalize: bool = True,
+    include_schema: bool = True,
+) -> Iterator[DataFrame]:
+    """:func:`construct_kg` as the owner of its staged caches: yields the
+    quads and unpersists the caches on exit, so write or merge the quads
+    inside the ``with`` block."""
+    quads, caches = _construct(spark, files, graph_uri, canonicalize, include_schema)
+    try:
+        yield quads
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
+def _construct(
+    spark: SparkSession,
+    files: DataFrame,
+    graph_uri: str,
+    canonicalize: bool,
+    include_schema: bool,
+) -> tuple[DataFrame, list[DataFrame]]:
     ns = graph_uri
     ingested = ingest(files, ns)
     # Stage the ingest: file metadata (with the sha256 invariant, without
@@ -394,7 +434,7 @@ def construct_kg(
     )
     pairs = same_as_pairs(linked)
 
-    # The ONE action: pull the distinct alias pairs to the driver
+    # The one action: pull the distinct alias pairs to the driver
     # (bounded take — materializes mentions+linked caches en route) and
     # solve canonicalization with union-find on minted terms, identical
     # to canon.canonical_mapping's driver path. Oversized pair sets
@@ -454,4 +494,4 @@ def construct_kg(
         ["subj", "pred", "obj", "graph"]
     )
 
-    return plain.unionByName(module_branch)
+    return plain.unionByName(module_branch), [meta, mentions, linked]

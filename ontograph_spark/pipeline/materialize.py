@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ontograph_spark import vocab
-from ontograph_spark.pipeline.construct import DEFAULT_GRAPH, construct_kg
+from ontograph_spark.pipeline.construct import DEFAULT_GRAPH, constructed
 from ontograph_spark.store.base import QUAD_SCHEMA
 from ontograph_spark.terms import mk_resource
 
@@ -128,9 +128,9 @@ def construct_resumable(
             F.count(F.lit(1)).alias("rows"),
             F.expr("bit_xor(xxhash64(sha2(content, 256)))").alias("sha_xor"),
         ).collect()[0]
-        quads = construct_kg(spark, part, graph_uri)
         data_path = os.path.join(out_root, f"bucket={b}")
-        write_quads(quads, data_path, write_partitions)
+        with constructed(spark, part, graph_uri) as quads:
+            write_quads(quads, data_path, write_partitions)
         triple_count = spark.read.schema(QUAD_SCHEMA).parquet(data_path).count()
         manifest = {
             "bucket": b,

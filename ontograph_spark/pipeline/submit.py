@@ -35,7 +35,7 @@ import time
 
 from pyspark.sql import SparkSession
 
-from ontograph_spark.pipeline.construct import DEFAULT_GRAPH, construct_kg
+from ontograph_spark.pipeline.construct import DEFAULT_GRAPH, constructed
 from ontograph_spark.pipeline.materialize import construct_resumable, write_quads
 
 REQUIRED_COLS = {"repo", "path", "commit", "lang", "content"}
@@ -132,15 +132,11 @@ def main(argv: list[str] | None = None) -> int:
         wout = _tempfile.mkdtemp(
             prefix="og_warmup_", dir=_os.path.dirname(args.output) or None
         )
-        write_quads(
-            construct_kg(spark, files.sample(args.warmup_frac, seed=7)),
-            wout,
-            args.write_partitions,
-        )
+        with constructed(spark, files.sample(args.warmup_frac, seed=7)) as warm:
+            write_quads(warm, wout, args.write_partitions)
         import shutil as _shutil
 
         _shutil.rmtree(wout, ignore_errors=True)
-        spark.catalog.clearCache()
 
     t0 = time.time()
     if args.buckets > 0:
@@ -163,14 +159,14 @@ def main(argv: list[str] | None = None) -> int:
             "output": args.output,
         }
     else:
-        quads = construct_kg(
+        with constructed(
             spark,
             files,
             graph_uri=args.graph_uri,
             canonicalize=not args.no_canonicalize,
             include_schema=not args.no_schema,
-        )
-        write_quads(quads, args.output, args.write_partitions)
+        ) as quads:
+            write_quads(quads, args.output, args.write_partitions)
         metrics = {
             "mode": "single-shot",
             # single-shot writes a flat parquet dir (no bucket= layout)

@@ -18,10 +18,19 @@ Literal encodings follow the reference: plain ``"label"`` literals for
 names, ``%f``-formatted ``xsd:decimal`` for account balances
 (ontology_literal.go:87-92 — 6 fixed decimals in both engines via
 ``format_string``/``printf``).
+
+:func:`quads_df` is memoized: the DataFrame (schemas inferred by Spark,
+the explode/struct/union plan analysed) is built once per live session,
+``sf_dir`` and version of the four source files, so a repeated call
+fires no schema-read jobs and re-analyses nothing.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,11 +72,62 @@ def _explode_triples(df: DataFrame, triples) -> DataFrame:
     )
 
 
+_TABLES = ("region", "nation", "supplier", "customer")
+
+
+def _signature(sf_dir: str) -> tuple | None:
+    """``(path, st_mtime_ns, st_size)`` of every leaf file of the four
+    source tables (a table may be a parquet file or directory); ``None``
+    when one is not on the local file system, which disables the memo."""
+    sig = []
+    try:
+        for t in _TABLES:
+            root = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.isfile(root):
+                leaves = [root]
+            elif os.path.isdir(root):
+                leaves = sorted(
+                    os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+                )
+            else:
+                return None
+            for p in leaves:
+                st = os.stat(p)
+                sig.append((p, st.st_mtime_ns, st.st_size))
+    except OSError:  # a file vanished mid-walk: build without the memo
+        return None
+    return tuple(sig)
+
+
+def _live(spark: SparkSession) -> bool:
+    jsc = spark.sparkContext._jsc
+    try:
+        return jsc is not None and not jsc.sc().isStopped()
+    except Py4JError:  # the JVM behind it is gone
+        return False
+
+
 def quads_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    """The quad table of ``sf_dir``, built once per (live session,
+    ``sf_dir``, :func:`_signature`): rewriting a source file at the same
+    path changes its mtime/size and so the key. The memo holds a few
+    plans and no persisted data."""
+    sig = _signature(sf_dir)
+    if sig is None or not _live(spark):
+        return _build(spark, sf_dir)
+    return _memo_build(spark, sf_dir, sig)
+
+
+@functools.lru_cache(maxsize=4)
+def _memo_build(spark: SparkSession, sf_dir: str, sig: tuple) -> DataFrame:
+    # ``sig`` only keys the cache: a new file version misses it
+    return _build(spark, sf_dir)
+
+
+def _build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    region, nation, supplier, customer = (
+        spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in _TABLES
+    )
 
     r = _explode_triples(
         region,

@@ -257,6 +257,16 @@ class QuadStoreBase:
         Two equi anti-joins (subj, then obj) keep the plan hash-joinable
         and broadcastable — an OR-condition anti-join would degrade to a
         nested-loop join at scale.
+
+        Input contract: callers materialize both inputs first (a store
+        snapshot, a written parquet table, a persisted or checkpointed
+        DataFrame). ``subjects`` feeds two anti-joins and the two
+        semi-joins of the touched hint, ``quads`` the insert and the
+        hint; the hint is collected in one job and the commit written in
+        another, and nothing here caches. A lazy plan such as
+        ``construct_kg``'s output is therefore recomputed for each use:
+        upserting 20 changed files that way took 27.7 s, against 7.8 s
+        for a ``merge_df`` of 20 new files on the same store.
         """
         s = subjects.select("subj").distinct()
         if broadcast:

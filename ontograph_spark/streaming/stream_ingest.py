@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ontograph_spark.pipeline.construct import DEFAULT_GRAPH, construct_kg
+from ontograph_spark.pipeline.construct import DEFAULT_GRAPH, constructed
 from ontograph_spark.store.parquet_store import ParquetQuadStore
 
 
@@ -56,10 +56,10 @@ def stream_construct_kg(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        quads = construct_kg(
+        with constructed(
             batch_df.sparkSession, batch_df, graph_uri, include_schema=(batch_id == 0)
-        )
-        store.merge_df(quads)
+        ) as quads:
+            store.merge_df(quads)
 
     writer = (
         files_stream.writeStream.foreachBatch(process)
@@ -104,25 +104,25 @@ def stream_construct_kg_with_closure(
         )
 
         spark = batch_df.sparkSession
-        quads = construct_kg(
+        with constructed(
             spark, batch_df, graph_uri, include_schema=(batch_id == 0)
-        )
-        store.merge_df(quads)
-        closure = closure_store.df().select("subj", "pred", "obj")
-        if not closure.take(1):
-            delta = rdfs_closure(store.df(), owl_rules=owl_rules)
-        else:
-            try:
-                delta = rdfs_closure_delta(
-                    closure,
-                    quads.select("subj", "pred", "obj"),
-                    owl_rules=owl_rules,
-                )
-            except ValueError:  # schema in the delta ⇒ full recompute
+        ) as quads:
+            store.merge_df(quads)
+            closure = closure_store.df().select("subj", "pred", "obj")
+            if not closure.take(1):
                 delta = rdfs_closure(store.df(), owl_rules=owl_rules)
-        closure_store.merge_df(
-            delta.withColumn("graph", F.lit(graph_uri))
-        )
+            else:
+                try:
+                    delta = rdfs_closure_delta(
+                        closure,
+                        quads.select("subj", "pred", "obj"),
+                        owl_rules=owl_rules,
+                    )
+                except ValueError:  # schema in the delta ⇒ full recompute
+                    delta = rdfs_closure(store.df(), owl_rules=owl_rules)
+            closure_store.merge_df(
+                delta.withColumn("graph", F.lit(graph_uri))
+            )
 
     writer = (
         files_stream.writeStream.foreachBatch(process)

@@ -248,3 +248,18 @@ def test_resumable_construction(spark, tmp_path, small_input):
     with open(os.path.join(root, "_manifests", "bucket-00000.json")) as f:
         m = json.load(f)
     assert {"bucket", "input_rows", "input_sha256_xor", "triples", "wall_sec"} <= set(m)
+
+
+def test_resumable_construction_releases_caches(spark, tmp_path, small_input):
+    """Each bucket's construction caches are unpersisted after its write:
+    no persistent RDD the run created is left. (Ids, not a count: Spark's
+    context cleaner may drop RDDs of earlier tests meanwhile.)"""
+    df, _ = small_input
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    ms = construct_resumable(spark, df, str(tmp_path / "kg"), GRAPH, buckets=3)
+    assert [m["skipped"] for m in ms] == [False] * 3
+    assert persistent() - before == set()

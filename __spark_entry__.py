@@ -2048,10 +2048,10 @@ def q_sparql_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL 1.1 property path (alternation + one-or-more closure):
     everything a customer transitively reaches over inNation/locatedIn —
     its nation (1 hop) and that nation's region (2 hops). The closure is
-    the same iterative frontier expansion as k_hop_reachability: one
-    hash equi-join + one anti-join per round, localCheckpoint-truncated
-    lineage, O(diameter) rounds (query/sparql.py:_transitive_closure).
-    The oracle is a DuckDB recursive CTE over the same edge set."""
+    functions/graph_algo.py:transitive_closure: the edge relation is
+    small, so it is closed on the driver after one bounded take and
+    joins back as a local relation. The oracle is a DuckDB recursive
+    CTE over the same edge set."""
     from ontograph_spark.query import sparql_select
 
     return sparql_select(quads_df(spark, sf_dir), _SPARQL_PATH)

@@ -4,7 +4,7 @@ at local[N] and local[4N], each annotated with the hypervisor CPU-steal
 measured across the run, so contaminated runs are identified by a
 direct hardware signal instead of guessed from wall-clock outliers.
 
-Why this supersedes the paired co-run harness (bench_scaling_paired.py):
+Why steal gating rather than paired co-running of the two levels:
 this sandbox is a Firecracker guest on a shared host; co-tenant bursts
 show up as *steal time* in /proc/stat (measured: an identical 6-second
 job ran 190.5 s while 304 stolen core-seconds accumulated, and 6.3 s

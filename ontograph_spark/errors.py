@@ -62,3 +62,13 @@ class LiteralTypeMismatchError(OntographError):
 
     def __init__(self) -> None:
         super().__init__("The literal is not of the expected type")
+
+
+class FixpointNotConvergedError(OntographError):
+    """An iterative rule fixpoint ran out of rounds while its last round
+    still derived new rows: returning would give a truncated closure."""
+
+    def __init__(self, max_rounds: int) -> None:
+        super().__init__(
+            f"The rule fixpoint did not converge within max_rounds={max_rounds}"
+        )

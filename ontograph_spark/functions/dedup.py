@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ontograph_spark.functions import graph_algo
 from ontograph_spark.functions.text import shingles, word_ngrams
 
 
@@ -730,7 +731,6 @@ def near_dup_keep(
     shingle_k: int = 5,
     threshold: float = 0.5,
     pairs: DataFrame | None = None,
-    pairs_driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Training-pipeline dedup keep-list: ``(id, canonical_id, keep)``
     for EVERY input document. Near-dup pair edges (``pairs``, default
@@ -740,14 +740,15 @@ def near_dup_keep(
     and ``keep`` marks the one representative per cluster — the rows a
     dedup pass retains.
 
-    Execution: pair sets under ``pairs_driver_threshold`` solve with a
-    plain min-id union-find on the driver (one cache-served collect; a
-    distributed iteration on a tiny graph is pure scheduler overhead) —
-    larger sets run the distributed min-label propagation
-    (ontograph_spark.pipeline.canon.connected_components). Both paths
-    produce the identical min-id mapping. The final join broadcasts the
-    mapping (one row per clustered doc — bounded by the duplicate count,
-    not the corpus), so the corpus-side pass is shuffle-free."""
+    Execution: pair sets of at most ``graph_algo.DRIVER_EDGE_LIMIT``
+    edges solve with a plain min-id union-find on the driver (one
+    cache-served collect; a distributed iteration on a tiny graph is
+    pure scheduler overhead) — larger sets run the distributed
+    min-label propagation (ontograph_spark.pipeline.canon.
+    connected_components). Both paths produce the identical min-id
+    mapping. The final join broadcasts the mapping (one row per
+    clustered doc — bounded by the duplicate count, not the corpus), so
+    the corpus-side pass is shuffle-free."""
     if pairs is None:
         pairs = ngram_jaccard_bitmap_pairs(
             df, id_col, text_col, shingle_k=shingle_k, threshold=threshold
@@ -768,7 +769,7 @@ def near_dup_keep(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     n_edges = edges.count()
-    if n_edges <= pairs_driver_threshold:
+    if n_edges <= graph_algo.DRIVER_EDGE_LIMIT:
         rows = edges.collect()  # served from the cache just built
         parent: dict = {}
 

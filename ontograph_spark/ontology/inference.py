@@ -43,14 +43,17 @@ fixpoint.
 range / inverseOf and the property-characteristic type triples) are
 vocabulary-sized — thousands of rows against billions of data triples —
 so every rule is one **broadcast** hash join against the data scan, no
-shuffle of the big side; the two schema transitive closures iterate on
-the tiny side only. The one data-sized iteration is the OWL transitive
-property closure, the same frontier expansion as
-functions/graph_algo.py:k_hop_reachability (hash equi-join + anti-join
-per round, ``localCheckpoint`` truncating lineage, O(longest chain)
-rounds over only the transitive predicates' edges). The final closure
-is a union of per-rule plans deduplicated by one distinct — a single
-shuffle at the end.
+shuffle of the big side; the two schema transitive closures go through
+the shared closure operator (functions/graph_algo.py:
+transitive_closure), which closes a vocabulary-sized relation on the
+driver after one bounded ``take``. The one data-sized iteration is the joint edge-rule
+fixpoint, whose OWL transitive step touches only the transitive
+predicates' edges (hash equi-join + anti-join per round,
+``localCheckpoint`` truncating lineage, O(longest chain) rounds); a
+fixpoint still deriving rows after ``max_rounds`` rounds raises
+``FixpointNotConvergedError`` instead of returning a truncated closure.
+The final closure is a union of per-rule plans deduplicated by one
+distinct — a single shuffle at the end.
 """
 
 from __future__ import annotations
@@ -60,6 +63,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ontograph_spark import vocab
+from ontograph_spark.errors import FixpointNotConvergedError
+from ontograph_spark.functions import graph_algo
 
 _TYPE = f"<{vocab.RDF_TYPE}>"
 _SUB_PROP = f"<{vocab.RDFS_SUB_PROPERTY_OF}>"
@@ -73,69 +78,16 @@ _TRANSITIVE = f"<{vocab.OWL_TRANSITIVE_PROPERTY}>"
 _SCHEMA_PREDS = (_SUB_PROP, _SUB_CLASS, _DOMAIN, _RANGE, _INVERSE)
 
 
-#: schema relations bigger than this fall back to the distributed loop
-SCHEMA_DRIVER_LIMIT = 200_000
-
-
-def transitive_closure(pairs: DataFrame, *, max_rounds: int = 20) -> DataFrame:
-    """Irreflexive transitive closure of a ``(sub, sup)`` relation.
-
-    Schema relations are vocabulary-sized, so the default path pulls
-    them to the driver (bounded ``take``), closes them in Python and
-    ships the result back — one job instead of one job *per round*,
-    the same bounded-small-graph pattern as pipeline/canon.py. A
-    relation larger than :data:`SCHEMA_DRIVER_LIMIT` (not actually a
-    vocabulary) uses the distributed frontier loop instead: one hash
-    join + anti-join per round, ``localCheckpoint`` truncating
-    lineage."""
-    base = pairs.select("sub", "sup").distinct()
-    head = base.take(SCHEMA_DRIVER_LIMIT + 1)
-    if len(head) <= SCHEMA_DRIVER_LIMIT:
-        out: set[tuple[str, str]] = set()
-        succ: dict[str, set[str]] = {}
-        for r in head:
-            succ.setdefault(r.sub, set()).add(r.sup)
-        for src in succ:
-            seen: set[str] = set()
-            stack = list(succ[src])
-            while stack:
-                n = stack.pop()
-                if n in seen:
-                    continue
-                seen.add(n)
-                stack.extend(succ.get(n, ()))
-            out.update((src, t) for t in seen if t != src)
-        spark = pairs.sparkSession
-        if not out:
-            return spark.createDataFrame([], "sub string, sup string")
-        return spark.createDataFrame(sorted(out), "sub string, sup string")
-    known = base.localCheckpoint(eager=True)
-    frontier = known
-    step = known.select(
-        F.col("sub").alias("_s"), F.col("sup").alias("_o")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        nxt = (
-            frontier.join(step, frontier["sup"] == step["_s"])
-            .select("sub", F.col("_o").alias("sup"))
-            .where(F.col("sub") != F.col("sup"))  # drop cycles' self-pairs
-            .distinct()
-            .join(known, ["sub", "sup"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not nxt.take(1):
-            return known
-        known = known.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    # The loop exhausted max_rounds with a non-empty frontier: returning
-    # `known` here would be a silently truncated closure — the worst
-    # failure mode. Fail loudly instead; callers with genuinely deeper
-    # chains raise max_rounds.
-    raise RuntimeError(
-        f"transitive_closure did not converge within max_rounds={max_rounds}"
-        " (non-empty frontier at loop exit); raise max_rounds for chains"
-        f" deeper than ~{max_rounds + 1} over relations larger than"
-        f" SCHEMA_DRIVER_LIMIT={SCHEMA_DRIVER_LIMIT}"
+def transitive_closure(pairs: DataFrame) -> DataFrame:
+    """Irreflexive transitive closure of a ``(sub, sup)`` relation: the
+    shared closure operator (functions/graph_algo.py), which closes a
+    vocabulary-sized relation on the driver after one bounded ``take``,
+    minus the self-pairs that cycles produce."""
+    closed = graph_algo.transitive_closure(
+        pairs.select(F.col("sub").alias("src"), F.col("sup").alias("dst"))
+    )
+    return closed.where(F.col("src") != F.col("dst")).select(
+        F.col("src").alias("sub"), F.col("dst").alias("sup")
     )
 
 
@@ -246,7 +198,7 @@ def _edge_rules_fixpoint(
             .localCheckpoint(eager=True)
         )
         if not new.take(1):
-            break
+            return known
         # plain union, NOT another checkpoint: both operands are already
         # materialized, so the union's lineage is one shallow node per
         # round — re-checkpointing it would rewrite the whole
@@ -254,7 +206,7 @@ def _edge_rules_fixpoint(
         # measured ~25% of closure wall at sf0.1)
         known = known.unionByName(new)
         frontier = new
-    return known
+    raise FixpointNotConvergedError(max_rounds)
 
 
 def rdfs_closure(
@@ -268,7 +220,9 @@ def rdfs_closure(
     Returns ``(subj, pred, obj)`` distinct — the input triples plus
     everything the rule set above entails. Use :func:`rdfs_inferred`
     for the delta only. ``owl_rules=False`` restricts to pure RDFS
-    (subPropertyOf/subClassOf/domain/range).
+    (subPropertyOf/subClassOf/domain/range). ``max_rounds`` bounds the
+    edge-rule fixpoint: one still deriving rows in its last round raises
+    ``FixpointNotConvergedError``.
 
     The input is materialized once (``localCheckpoint``) before the
     rules run: every rule family scans it at least once, and for a
@@ -284,8 +238,8 @@ def rdfs_closure(
             F.col("subj").alias("sub"), F.col("obj").alias("sup")
         )
 
-    sp = transitive_closure(rel(_SUB_PROP), max_rounds=max_rounds)
-    sc = transitive_closure(rel(_SUB_CLASS), max_rounds=max_rounds)
+    sp = transitive_closure(rel(_SUB_PROP))
+    sc = transitive_closure(rel(_SUB_CLASS))
     dom = rel(_DOMAIN)
     rng = rel(_RANGE)
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontograph_spark.functions import graph_algo
+
 
 def connected_components(
     edges: DataFrame, max_iterations: int = 12
@@ -67,7 +69,6 @@ def connected_components(
 def canonical_mapping(
     edges: DataFrame,
     max_iterations: int = 12,
-    driver_threshold: int = 100_000,
     assume_large: bool = False,
 ) -> DataFrame:
     """``(src, dst)`` alias edges → ``(node, component)`` rewrite mapping
@@ -77,11 +78,11 @@ def canonical_mapping(
     canonicals stable under merges instead of letting a lexicographically
     small alias win.
 
-    Hybrid execution: edge sets under ``driver_threshold`` rows are
-    collected and solved with union-find on the driver (a distributed
-    iteration on a tiny graph is pure scheduler overhead); larger sets run
-    the distributed label-propagation loop. Both paths produce identical
-    mappings — pinned by tests/test_pipeline.py.
+    Hybrid execution: edge sets of at most ``graph_algo.DRIVER_EDGE_LIMIT``
+    rows are collected and solved with union-find on the driver (a
+    distributed iteration on a tiny graph is pure scheduler overhead);
+    larger sets run the distributed label-propagation loop. Both paths
+    produce identical mappings — pinned by tests/test_pipeline.py.
 
     Action discipline: the small path costs exactly ONE Spark action (a
     bounded ``take``) — no checkpoint, no separate count — because this
@@ -90,8 +91,9 @@ def canonical_mapping(
     ``assume_large=True`` so the oversized fallback doesn't pay a second
     100k-row driver transfer."""
     if not assume_large:
-        sample = edges.take(driver_threshold + 1)
-        if len(sample) <= driver_threshold:
+        limit = graph_algo.DRIVER_EDGE_LIMIT
+        sample = edges.take(limit + 1)
+        if len(sample) <= limit:
             out = union_find_mapping([(r["src"], r["dst"]) for r in sample])
             return edges.sparkSession.createDataFrame(
                 out or [], "node string, component string"
@@ -148,15 +150,6 @@ def union_find_mapping(
         rep = canon[0] if canon else min(nodes)
         out.extend((n, rep) for n in nodes if n != rep)
     return out
-
-
-def _driver_canonical_mapping(edges: DataFrame) -> DataFrame:
-    """Union-find twin of the distributed path, for small edge sets."""
-    rows = [(r["src"], r["dst"]) for r in edges.collect()]
-    out = union_find_mapping(rows)
-    return edges.sparkSession.createDataFrame(
-        out or [], "node string, component string"
-    )
 
 
 def rewrite_terms(quads: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from ontograph_spark import vocab
+from ontograph_spark.functions import graph_algo
 from ontograph_spark.ontology.resources import (
     OntologyClass,
     OntologyDataProperty,
@@ -354,10 +355,6 @@ def schema_quads(spark: SparkSession, graph_uri: str) -> DataFrame:
 # -- orchestration ----------------------------------------------------------
 
 
-#: alias-pair sets above this size fall back to the distributed CC path
-PAIRS_DRIVER_THRESHOLD = 100_000
-
-
 def construct_kg(
     spark: SparkSession,
     files: DataFrame,
@@ -376,10 +373,11 @@ def construct_kg(
     each shuffle stage of the ``take``'s plan as its own job, and ``take``
     may scan further partitions in follow-up jobs (8 jobs for a
     40,000-row table at ``local[3]``). An alias-pair set over
-    ``PAIRS_DRIVER_THRESHOLD`` adds the distributed connected-components
-    rounds (canon.canonical_mapping). Job-submission barriers are pure
-    serial time (they were ~half the wall at 500k rows before this
-    restructure), so the count is part of the design, not an accident.
+    ``graph_algo.DRIVER_EDGE_LIMIT`` adds the distributed
+    connected-components rounds (canon.canonical_mapping).
+    Job-submission barriers are pure serial time (they were ~half the
+    wall at 500k rows before this restructure), so the count is part of
+    the design, not an accident.
 
     The three staged ``DISK_ONLY`` caches stay persisted after the call
     and belong to the caller; :func:`constructed` releases them.
@@ -439,7 +437,8 @@ def _construct(
     # solve canonicalization with union-find on minted terms, identical
     # to canon.canonical_mapping's driver path. Oversized pair sets
     # (adversarial alias graphs) take the distributed CC path instead.
-    pair_rows = pairs.take(PAIRS_DRIVER_THRESHOLD + 1) if canonicalize else []
+    limit = graph_algo.DRIVER_EDGE_LIMIT
+    pair_rows = pairs.take(limit + 1) if canonicalize else []
 
     # Branch split: module IRIs appear ONLY in the import-edge and
     # module-entity branches — canonicalization rewrites (and re-dedups)
@@ -459,7 +458,7 @@ def _construct(
         emit_module_quads(linked, pairs, ns)
     )
     if canonicalize:
-        if len(pair_rows) <= PAIRS_DRIVER_THRESHOLD:
+        if len(pair_rows) <= limit:
             edge_tuples = [
                 (
                     mk_resource(mint_uri_py(ns, "module", r["name"])),

@@ -172,15 +172,15 @@ variable positions survive column pruning. The BGP joins on shared
 variable columns, most-constrained pattern first, greedily extending
 along shared variables so no intermediate is a cartesian unless the query
 itself is; AQE then picks broadcast sides at runtime (selective patterns
-produce tiny scans). Property-path closure (``+``/``*``) is the same
-iterative frontier expansion as functions/graph_algo.py:
-k_hop_reachability — one hash equi-join + one anti-join per round,
-``localCheckpoint`` truncating lineage, O(diameter) rounds; a path with a
-constant endpoint seeds the frontier from that single node instead of
-materialising the whole closure. No driver-side matching anywhere — ASK
-is a ``limit(1)`` probe, COUNT is one aggregate; the only driver
-participation is the per-round emptiness probe of the closure loop
-(inherent to any iterative fixpoint, same as pagerank/CC). An OPTIONAL
+produce tiny scans). Property-path closure (``+``/``*``) is the shared
+closure operator functions/graph_algo.py:transitive_closure: one bounded
+``take`` of the path's edge relation, closed on the driver and shipped
+back as a local relation when the edges and the closure fit its limit,
+otherwise the distributed frontier loop (one hash equi-join + one
+anti-join per round, O(diameter) rounds); a path with a constant
+endpoint closes from that single node instead of materialising the
+whole closure. Solution matching never runs on the driver — ASK is a
+``limit(1)`` probe, COUNT is one aggregate. An OPTIONAL
 sharing no variables with its left side compiles to a
 BroadcastNestedLoopJoin (``join(lit(True), "left")``) — semantically
 required, quadratic by nature; usually a query typo, so worth knowing.
@@ -195,6 +195,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ontograph_spark import vocab
+from ontograph_spark.functions.graph_algo import transitive_closure
 from ontograph_spark.terms import (
     term_datatype_col,
     term_language_col,
@@ -1633,10 +1634,10 @@ def _path_edges(quads: DataFrame, node: tuple, g, dataset) -> DataFrame:
             out = out.unionByName(_path_edges(quads, branch, g, dataset))
         return out.distinct()
     if kind == "plus":
-        return _transitive_closure(_path_edges(quads, node[1], g, dataset))
+        return transitive_closure(_path_edges(quads, node[1], g, dataset))
     if kind in ("star", "zeroone"):
         base = _path_edges(quads, node[1], g, dataset)
-        pairs = _transitive_closure(base) if kind == "star" else base
+        pairs = transitive_closure(base) if kind == "star" else base
         nodes = _graph_nodes(quads, g, dataset)
         return pairs.unionByName(
             nodes.select(
@@ -1679,174 +1680,67 @@ def _graph_nodes(quads: DataFrame, g, dataset) -> DataFrame:
     )
 
 
-def _transitive_closure(edges: DataFrame) -> DataFrame:
-    """One-or-more closure of an edge relation: iterative frontier
-    expansion — per round one hash equi-join (frontier ⋈ edges) plus one
-    anti-join against the accumulated pairs, ``localCheckpoint`` per
-    round so lineage stays O(1). O(diameter) rounds; the same loop shape
-    as functions/graph_algo.py:k_hop_reachability. Driver participation
-    is only the per-round emptiness probe, never row data. A ``__g``
-    column (GRAPH ?var) joins like a node id — all graphs close
-    concurrently, each within itself."""
-    keys = ["__g"] if "__g" in edges.columns else []
-    edges = edges.distinct().localCheckpoint()
-    result = edges
-    frontier = edges
-    while True:
-        step = (
-            frontier.withColumnRenamed("dst", "__mid")
-            .join(edges.withColumnRenamed("src", "__mid"), ["__mid", *keys])
-            .select("src", "dst", *keys)
-            .distinct()
-            .join(result, ["src", "dst", *keys], "left_anti")
-            .localCheckpoint()
-        )
-        if step.isEmpty():
-            return result
-        result = result.unionByName(step).localCheckpoint()
-        frontier = step
-
-
-def _closure_from(
-    quads: DataFrame, seed: str, node: tuple, g, dataset, *, include_zero: bool
-) -> DataFrame:
-    """Seeded closure for ``<const> path+ ?v`` / ``<const> path* ?v``:
-    BFS from the single constant endpoint instead of materialising the
-    whole closure — the frontier is one node's reach set, so each round
-    is a selective hash join (exactly k_hop_reachability with k=∞)."""
-    base = _path_edges(quads, node, g, dataset).localCheckpoint()
-    spark = quads.sparkSession
-    seeds = spark.createDataFrame([(seed,)], "node string")
-    visited = seeds if include_zero else seeds.limit(0)
-    frontier = seeds
-    while True:
-        step = (
-            frontier.join(base, frontier["node"] == base["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .localCheckpoint()
-        )
-        if step.isEmpty():
-            return visited
-        visited = visited.unionByName(step).localCheckpoint()
-        frontier = step
-
-
 def _compile_path_pattern(
     quads: DataFrame, pp: PathPattern, dataset: list[str]
 ) -> DataFrame:
     """A path triple pattern → a DataFrame of its variable bindings.
-    Constant endpoints seed the closure where possible (plus/star with a
-    bound subject or object); otherwise the full pair relation is
-    filtered/projected like an ordinary scan."""
+    A closure path (plus/star) with one constant endpoint is closed from
+    that endpoint only (the seeded closure); otherwise the full pair
+    relation is filtered/projected like an ordinary scan. Under
+    ``GRAPH ?var`` the pairs carry ``__g`` and the variable binds it."""
     s_kind, s_val = pp.s
     o_kind, o_val = pp.o
     kind = pp.path[0]
     per = pp.g is not None and pp.g[0] == "var"
-    if per:
-        gname = pp.g[1]
-        if gname in (s_val, o_val):
-            raise SparqlSyntaxError(
-                "GRAPH variable reused as a path endpoint is not supported"
-            )
-        pairs = _path_edges(quads, pp.path, pp.g, dataset)
-        conds: list[Column] = []
-        proj: list[Column] = [_graph_term(F.col("__g")).alias(gname)]
-        if s_kind == "term":
-            conds.append(F.col("src") == F.lit(s_val))
-        else:
-            proj.append(F.col("src").alias(s_val))
-        if o_kind == "term":
-            conds.append(F.col("dst") == F.lit(o_val))
-        elif o_kind == "var" and s_kind == "var" and o_val == s_val:
-            conds.append(F.col("dst") == F.col("src"))
-        else:
-            proj.append(F.col("dst").alias(o_val))
-        for c in conds:
-            pairs = pairs.where(c)
-        out = pairs.select(*proj)
-        if _path_nullable(pp.path) and "term" in (s_kind, o_kind):
-            # §18.4 ZeroLengthPath with a constant endpoint: one
-            # zero-length solution per graph in scope, whether or not
-            # the term occurs there
-            graphs = (
-                _scoped(quads, pp.g, dataset)
-                .select(_graph_term(F.col("graph")).alias(gname))
-                .distinct()
-            )
-            if s_kind == "term" and o_kind == "term":
-                if s_val == o_val:
-                    out = out.unionByName(graphs).distinct()
-            elif s_kind == "term":
-                out = out.unionByName(
-                    graphs.select(F.col(gname), F.lit(s_val).alias(o_val))
-                ).distinct()
-            else:
-                out = out.unionByName(
-                    graphs.select(F.col(gname), F.lit(o_val).alias(s_val))
-                ).distinct()
-        return out
-    # seeded fast path: one constant endpoint on a closure path.
-    # include_zero covers star AND a plus whose inner path is itself
-    # nullable — (p?)+ matches the zero-length walk too (§18.4)
+    keys = ["__g"] if per else []
+    if per and pp.g[1] in (s_val, o_val):
+        raise SparqlSyntaxError(
+            "GRAPH variable reused as a path endpoint is not supported"
+        )
     if kind in ("plus", "star") and s_kind == "term" and o_kind == "var":
-        reach = _closure_from(
-            quads,
-            s_val,
-            pp.path[1],
-            pp.g,
-            dataset,
-            include_zero=_path_nullable(pp.path),
+        pairs = transitive_closure(
+            _path_edges(quads, pp.path[1], pp.g, dataset), seed=s_val
         )
-        return reach.select(F.col("node").alias(o_val))
-    if kind in ("plus", "star") and o_kind == "term" and s_kind == "var":
-        inv = ("inv", pp.path[1])
-        reach = _closure_from(
-            quads,
-            o_val,
-            inv,
-            pp.g,
-            dataset,
-            include_zero=_path_nullable(pp.path),
-        )
-        return reach.select(F.col("node").alias(s_val))
-    pairs = _path_edges(quads, pp.path, pp.g, dataset)
-    conds: list[Column] = []
+    elif kind in ("plus", "star") and o_kind == "term" and s_kind == "var":
+        pairs = transitive_closure(
+            _path_edges(quads, ("inv", pp.path[1]), pp.g, dataset), seed=o_val
+        ).select(F.col("dst").alias("src"), F.col("src").alias("dst"), *keys)
+    else:
+        pairs = _path_edges(quads, pp.path, pp.g, dataset)
+    if _path_nullable(pp.path) and "term" in (s_kind, o_kind):
+        # §18.4 ZeroLengthPath: a constant endpoint relates to itself
+        # even when it never occurs in the graph (the graph-node domain
+        # in _path_edges covers only variable-variable endpoints, and a
+        # seeded closure none); under GRAPH ?var once per graph in scope
+        # (two different constants never meet on a zero-length walk)
+        const = s_val if s_kind == "term" else o_val
+        if s_kind != o_kind or s_val == o_val:
+            zero = (
+                _scoped(quads, pp.g, dataset).select(F.col("graph").alias("__g"))
+                if per
+                else quads.sparkSession.range(1)
+            )
+            pairs = pairs.unionByName(
+                zero.select(
+                    F.lit(const).alias("src"), F.lit(const).alias("dst"), *keys
+                )
+            ).distinct()
     proj: list[Column] = []
+    if per:
+        proj.append(_graph_term(F.col("__g")).alias(pp.g[1]))
     if s_kind == "term":
-        conds.append(F.col("src") == F.lit(s_val))
+        pairs = pairs.where(F.col("src") == F.lit(s_val))
     else:
         proj.append(F.col("src").alias(s_val))
     if o_kind == "term":
-        conds.append(F.col("dst") == F.lit(o_val))
-    elif o_kind == "var" and s_kind == "var" and o_val == s_val:
-        conds.append(F.col("dst") == F.col("src"))
+        pairs = pairs.where(F.col("dst") == F.lit(o_val))
+    elif s_kind == "var" and o_val == s_val:
+        pairs = pairs.where(F.col("dst") == F.col("src"))
     else:
         proj.append(F.col("dst").alias(o_val))
-    for c in conds:
-        pairs = pairs.where(c)
-    zero_const = _path_nullable(pp.path) and "term" in (s_kind, o_kind)
-    spark = quads.sparkSession
     if not proj:
-        out = pairs.select(F.lit(True).alias("__exists__")).limit(1)
-        if zero_const and s_val == o_val:
-            # <c> nullable-path <c> holds by the zero-length walk alone
-            out = out.unionByName(
-                spark.range(1).select(F.lit(True).alias("__exists__"))
-            ).limit(1)
-        return out
-    out = pairs.select(*proj)
-    if zero_const:
-        # §18.4 ZeroLengthPath: the constant endpoint relates to itself
-        # even when it never occurs in the graph (the graph-node domain
-        # in _path_edges covers only variable-variable endpoints)
-        const = s_val if s_kind == "term" else o_val
-        var = o_val if s_kind == "term" else s_val
-        out = out.unionByName(
-            spark.createDataFrame([(const,)], f"{var} string")
-        ).distinct()
-    return out
+        return pairs.select(F.lit(True).alias("__exists__")).limit(1)
+    return pairs.select(*proj)
 
 
 # --------------------------------------------------------------------------

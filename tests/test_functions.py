@@ -470,15 +470,15 @@ def test_near_dup_keep(spark, docs_df):
     assert len(got) == 5
 
 
-def test_near_dup_keep_distributed_path_matches(spark, docs_df):
+def test_near_dup_keep_distributed_path_matches(spark, docs_df, monkeypatch):
     """The distributed CC fallback must produce the identical mapping as
-    the driver union-find (forced by a zero driver threshold)."""
+    the driver union-find (forced by a zero driver limit)."""
+    from ontograph_spark.functions import graph_algo
     from ontograph_spark.functions.dedup import near_dup_keep
 
     small = near_dup_keep(docs_df, "doc_id", threshold=0.5).collect()
-    large = near_dup_keep(
-        docs_df, "doc_id", threshold=0.5, pairs_driver_threshold=0
-    ).collect()
+    monkeypatch.setattr(graph_algo, "DRIVER_EDGE_LIMIT", 0)
+    large = near_dup_keep(docs_df, "doc_id", threshold=0.5).collect()
     assert sorted(map(tuple, small)) == sorted(map(tuple, large))
 
 

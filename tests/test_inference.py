@@ -145,31 +145,33 @@ def test_transitive_closure_cycle_safe(spark):
     }
 
 
-def test_transitive_closure_distributed_nonconvergence_raises(
-    spark, monkeypatch
-):
-    """The distributed frontier loop must fail loudly — not return a
-    silently truncated closure — when max_rounds exhausts with a
-    non-empty frontier. SCHEMA_DRIVER_LIMIT is patched down so a small
-    deep chain takes the distributed path."""
-    import pytest
-
-    from ontograph_spark.ontology import inference
+def test_transitive_closure_frontier_path_exact(spark, monkeypatch):
+    """With the driver limit patched below the relation's size, the
+    closure runs the distributed frontier loop and is still exact."""
+    from ontograph_spark.functions import graph_algo
 
     chain = [(f"n{i}", f"n{i+1}") for i in range(8)]
     pairs = spark.createDataFrame(chain, "sub string, sup string")
-    monkeypatch.setattr(inference, "SCHEMA_DRIVER_LIMIT", 5)
-    # frontier extends one hop per round: an 8-edge chain needs 7 rounds
-    with pytest.raises(RuntimeError, match="did not converge"):
-        inference.transitive_closure(pairs, max_rounds=3)
-    # ...and with enough rounds the same input converges to the exact
-    # closure.
-    rows = {
-        tuple(r)
-        for r in inference.transitive_closure(pairs, max_rounds=8).collect()
-    }
+    monkeypatch.setattr(graph_algo, "DRIVER_EDGE_LIMIT", 5)
+    rows = {tuple(r) for r in transitive_closure(pairs).collect()}
     expect = {(f"n{i}", f"n{j}") for i in range(9) for j in range(i + 1, 9)}
     assert rows == expect
+
+
+def test_rdfs_closure_nonconvergence_raises(spark):
+    """The edge-rule fixpoint must fail loudly, not return a silently
+    truncated closure, when max_rounds runs out while a round still
+    derives new triples: a 5-edge transitive chain needs more than one
+    round."""
+    from ontograph_spark.errors import FixpointNotConvergedError
+
+    rows = [(E(f"n{i}"), E("inside"), E(f"n{i+1}")) for i in range(5)]
+    rows.append((E("inside"), TYPE, TRA))
+    quads = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    with pytest.raises(FixpointNotConvergedError, match="max_rounds=1"):
+        rdfs_closure(quads, max_rounds=1)
+    full = {tuple(r) for r in rdfs_closure(quads).collect()}
+    assert (E("n0"), E("inside"), E("n5")) in full
 
 
 def test_incremental_delta_matches_full_recompute(spark):

@@ -5,13 +5,19 @@ sequence, alternation, +, *, ?), the compiled DataFrame result must equal
 a naive Python evaluator implementing SPARQL 1.1 §9.3 path semantics
 (pairs as SETS — path results are distinct; zero-length paths match every
 graph term with itself). Exercises both the general pair-relation
-compilation and the seeded closure fast path (constant subject)."""
+compilation and the seeded closure fast path (constant subject), each on
+both paths of the closure operator: closed on the driver, and the
+distributed frontier loop (driver limit patched to 0)."""
 
 from __future__ import annotations
 
+import uuid
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from ontograph_spark.functions import graph_algo
 from ontograph_spark.query.sparql import _Parser, _compile_group
 
 NODES = ["<u:a>", "<u:b>", "<u:c>", "<u:d>"]
@@ -115,15 +121,29 @@ def graph_terms(triples) -> set[str]:
     return {s for s, _, _ in triples} | {o for _, _, o in triples}
 
 
-def _quads(spark, triples):
-    rows = [(s, p, o, "u:g") for s, p, o in triples]
+def _quads(spark, triples, graph="u:g"):
+    rows = [(s, p, o, graph) for s, p, o in triples]
     quads = spark.createDataFrame(
         rows or [("<u:none>", "<u:none>", "<u:none>", "u:none")],
         "subj string, pred string, obj string, graph string",
     )
     if not rows:
-        quads = quads.where("graph = 'u:g'")
+        quads = quads.where(f"graph = '{graph}'")
     return quads
+
+
+def on_both_paths(run, limit=0):
+    """``run()`` with the driver closure, then with the closure operator's
+    driver limit patched to ``limit`` (0 forces the frontier loop)."""
+    driver = run()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph_algo, "DRIVER_EDGE_LIMIT", limit)
+        return driver, run()
+
+
+def select(quads, query, cols):
+    rows = _compile_group(quads, _Parser(query).parse_query().group).collect()
+    return {tuple(r[c] for c in cols) for r in rows}
 
 
 @settings(
@@ -133,12 +153,12 @@ def _quads(spark, triples):
 )
 @given(triples=edges_st, path=path_st)
 def test_path_pairs_match_naive_evaluation(spark, triples, path):
-    q = _Parser(
-        f"SELECT * WHERE {{ ?x {path_to_text(path)} ?y }}"
-    ).parse_query()
-    df = _compile_group(_quads(spark, triples), q.group)
-    got = {(r["x"], r["y"]) for r in df.collect()}
-    assert got == naive_pairs(triples, path)
+    query = f"SELECT * WHERE {{ ?x {path_to_text(path)} ?y }}"
+    want = naive_pairs(triples, path)
+    for got in on_both_paths(
+        lambda: select(_quads(spark, triples), query, ("x", "y"))
+    ):
+        assert got == want
 
 
 @settings(
@@ -155,15 +175,92 @@ def test_path_pairs_match_naive_evaluation(spark, triples, path):
 def test_seeded_closure_matches_naive(spark, triples, pred, src, mod):
     """Constant-subject closure (the seeded BFS fast path) must agree
     with the full-closure semantics restricted to that subject."""
-    q = _Parser(
-        f"SELECT * WHERE {{ {src} {pred}{mod} ?y }}"
-    ).parse_query()
-    df = _compile_group(_quads(spark, triples), q.group)
-    got = {r["y"] for r in df.collect()}
+    query = f"SELECT * WHERE {{ {src} {pred}{mod} ?y }}"
     node = ("plus" if mod == "+" else "star", ("link", pred))
-    want = {o for s, o in naive_pairs(triples, node) if s == src}
+    want = {(o,) for s, o in naive_pairs(triples, node) if s == src}
     if mod == "*":
         # a constant subject matches itself on the zero-length path even
         # when absent from the graph (SPARQL §9.3 zero-length semantics)
-        want |= {src}
-    assert got == want
+        want |= {(src,)}
+    for got in on_both_paths(
+        lambda: select(_quads(spark, triples), query, ("y",))
+    ):
+        assert got == want
+
+
+def test_graph_var_closes_each_graph_within_itself(spark):
+    """Under ``GRAPH ?g`` two graphs with cycles close separately: pairs
+    never chain across graphs, and each cycle yields its self-pairs. The
+    seeded closure (constant subject) runs per graph too."""
+    g1 = [("<u:a>", "<u:p>", "<u:b>"), ("<u:b>", "<u:p>", "<u:a>"),
+          ("<u:b>", "<u:p>", "<u:c>")]
+    g2 = [("<u:c>", "<u:p>", "<u:d>"), ("<u:d>", "<u:p>", "<u:c>"),
+          ("<u:a>", "<u:p>", "<u:c>")]
+    quads = _quads(spark, g1, "u:g1").unionByName(_quads(spark, g2, "u:g2"))
+    link = ("link", "<u:p>")
+    for mod, kind in (("+", "plus"), ("*", "star")):
+        want = {
+            (f"<{g}>", x, y)
+            for g, triples in (("u:g1", g1), ("u:g2", g2))
+            for x, y in naive_pairs(triples, (kind, link))
+        }
+        query = f"SELECT * WHERE {{ GRAPH ?g {{ ?x <u:p>{mod} ?y }} }}"
+        for got in on_both_paths(
+            lambda: select(quads, query, ("g", "x", "y"))
+        ):
+            assert got == want
+        seeded = f"SELECT * WHERE {{ GRAPH ?g {{ <u:a> <u:p>{mod} ?y }} }}"
+        want_a = {(g, y) for g, x, y in want if x == "<u:a>"}
+        if mod == "*":
+            want_a |= {("<u:g1>", "<u:a>"), ("<u:g2>", "<u:a>")}
+        for got in on_both_paths(
+            lambda: select(quads, seeded, ("g", "y"))
+        ):
+            assert got == want_a
+
+
+def test_closure_past_the_limit_falls_back_exactly(spark):
+    """Edges that fit the driver limit but whose closure does not: the
+    operator abandons the driver closure, runs the frontier loop, and is
+    still exact."""
+    chain = [(f"<u:n{i}>", "<u:p>", f"<u:n{i + 1}>") for i in range(6)]
+    quads = _quads(spark, chain)
+    path = ("plus", ("link", "<u:p>"))
+    want = naive_pairs(chain, path)
+    assert len(chain) <= 10 < len(want)  # 6 edges, 21 closure pairs
+    query = "SELECT * WHERE { ?x <u:p>+ ?y }"
+    for got in on_both_paths(
+        lambda: select(quads, query, ("x", "y")), limit=10
+    ):
+        assert got == want
+    edges = spark.createDataFrame(
+        [(s, o) for s, _, o in chain], "src string, dst string"
+    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph_algo, "DRIVER_EDGE_LIMIT", 10)
+        plan = graph_algo.transitive_closure(edges)._jdf.queryExecution()
+        assert "LocalRelation" not in plan.optimizedPlan().toString()
+    plan = graph_algo.transitive_closure(edges)._jdf.queryExecution()
+    assert "LocalRelation" in plan.optimizedPlan().toString()
+
+
+def test_closure_jobs_do_not_grow_with_chain_length(spark):
+    """Compiling a ``+`` path fires the same number of Spark jobs for a
+    3-edge and a 12-edge chain: no per-round job on the driver path."""
+    sc = spark.sparkContext
+
+    def jobs(n):
+        chain = [(f"<u:n{i}>", "<u:p>", f"<u:n{i + 1}>") for i in range(n)]
+        quads = _quads(spark, chain).localCheckpoint()
+        q = _Parser("SELECT * WHERE { ?x <u:p>+ ?y }").parse_query()
+        group = f"test-path-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = _compile_group(quads, q.group).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rows) == n * (n + 1) // 2
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(3) == jobs(12)

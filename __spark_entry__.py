@@ -2679,6 +2679,43 @@ WHERE ty.pred = '{RDF_TYPE}' AND ty.obj = '<{G}#Supplier>'
 """
 
 
+_SPARQL_EQ_VALUE = f"""
+PREFIX t: <{G}#>
+SELECT ?who ?bal WHERE {{ GRAPH <{G}> {{
+    ?who t:acctBal ?bal .
+    FILTER(?bal IN ("0537.460"^^xsd:decimal, "+2095.23"^^xsd:decimal,
+                    "73"^^xsd:integer, "4090.7900000000001"^^xsd:decimal)
+           || ?bal = "1863.8400"^^xsd:decimal
+           || ?bal = "-0846.69"^^xsd:decimal)
+}} }}"""
+
+
+def q_sparql_eq_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``=`` and ``IN`` on numeric literals compare VALUES (SPARQL §17.3
+    op:numeric-equal): the ``%f``-formatted ``xsd:decimal`` balances
+    ("537.460000") equal the non-canonical constants "0537.460",
+    "+2095.23" and the integer "73" — term equality would answer
+    nothing — while "4090.7900000000001" stays apart from 4090.79, which
+    a comparison through doubles would merge. Values compare exactly as
+    ``decimal(38,18)``."""
+    from ontograph_spark.query import sparql_select
+
+    return sparql_select(quads_df(spark, sf_dir), _SPARQL_EQ_VALUE)
+
+
+_SQL_SPARQL_EQ_VALUE = f"""{_W}
+SELECT b.subj AS who, b.obj AS bal
+FROM quads b
+WHERE b.pred = '<{G}#acctBal>'
+  AND b.obj LIKE '%^^<{vocab.XSD_DECIMAL}>'
+  AND CAST(regexp_extract(b.obj, '"([^"]*)"', 1) AS DECIMAL(38, 18)) IN (
+      CAST('537.46' AS DECIMAL(38, 18)), CAST('2095.23' AS DECIMAL(38, 18)),
+      CAST('73' AS DECIMAL(38, 18)),
+      CAST('4090.7900000000001' AS DECIMAL(38, 18)),
+      CAST('1863.84' AS DECIMAL(38, 18)), CAST('-846.69' AS DECIMAL(38, 18)))
+"""
+
+
 _SPARQL_NESTED_EXISTS = f"""
 PREFIX t: <{G}#>
 SELECT ?n ?big WHERE {{ GRAPH <{G}> {{
@@ -2805,12 +2842,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # VALUES pre-projection) lead so they get driver attestation; the
     # displaced twice-green entries remain covered by
     # tests/test_entry_contract.py (a local replica of the driver gate over
-    # ALL entries at sf0.001).
+    # ALL entries at sf0.001). sparql_eq_value (numeric value equality
+    # through =/IN) follows them for the same reason.
     return {
         "sparql_unbound": q_sparql_unbound,
         "sparql_nested_exists": q_sparql_nested_exists,
         "sparql_order_tiers": q_sparql_order_tiers,
         "sparql_values_post": q_sparql_values_post,
+        "sparql_eq_value": q_sparql_eq_value,
         "sparql_bgp": q_sparql_bgp,
         "sparql_optional": q_sparql_optional,
         "sparql_filter": q_sparql_filter,
@@ -2896,6 +2935,7 @@ def oracle_sql() -> dict[str, str]:
         "sparql_nested_exists": _SQL_SPARQL_NESTED_EXISTS,
         "sparql_order_tiers": _SQL_SPARQL_ORDER_TIERS,
         "sparql_values_post": _SQL_SPARQL_VALUES_POST,
+        "sparql_eq_value": _SQL_SPARQL_EQ_VALUE,
         "kg_flagship": _SQL_KG_FLAGSHIP,
         "match_pattern": _SQL_MATCH_PATTERN,
         "subject_probe": _SQL_SUBJECT_PROBE,

@@ -82,7 +82,9 @@ def canonical_mapping(
     rows are collected and solved with union-find on the driver (a
     distributed iteration on a tiny graph is pure scheduler overhead);
     larger sets run the distributed label-propagation loop. Both paths
-    produce identical mappings — pinned by tests/test_pipeline.py.
+    produce identical mappings when propagation converges within
+    ``max_iterations`` rounds (tests/test_pipeline.py runs the loop with
+    the limit patched to 0 against ``union_find_mapping``).
 
     Action discipline: the small path costs exactly ONE Spark action (a
     bounded ``take``) — no checkpoint, no separate count — because this

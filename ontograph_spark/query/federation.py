@@ -94,11 +94,6 @@ def _escape_str(s: str) -> str:
     )
 
 
-def _num_text(v) -> str:
-    f = float(v)
-    return str(int(f)) if f.is_integer() else repr(f)
-
-
 #: SPARQL 1.1 Fed §2.1 bound join: when the LOCAL side of a SERVICE
 #: join is already solved and its distinct bindings on the shared
 #: variables number at most this, they ship inside the query as a
@@ -231,7 +226,7 @@ def expr_to_sparql(node) -> str:
     if k == "var":
         return f"?{node[1]}"
     if k == "num":
-        return _num_text(node[1])
+        return node[1]  # the constant's lexical form, as written
     if k == "str":
         return f'"{_escape_str(node[1])}"'
     if k == "term":

@@ -149,15 +149,33 @@ binding ``coalesce``d — exact, at the cost of a non-equi join for that
 one step (tracked per-variable, so the common all-bound case keeps the
 plain hash-joinable equi join; property-pinned in
 tests/test_sparql_property.py including the nested case).
-Comparison semantics: the constant operand picks the mode — numeric
-constant ⇒ both sides as doubles via the literal's value (``try_cast``;
-non-numeric bindings compare as null ⇒ row dropped, matching SPARQL's
-type-error-⇒-false), plain string constant ⇒ the literal's value, IRI or
-lang/datatype-tagged constant ⇒ the full encoded term. Var-vs-var
-``=``/``!=`` are RDF term equality; var-vs-var order comparisons follow
-the §17.3 operator mapping dispatched on datatype (numeric pairs by
-value, plain/xsd:string pairs by codepoint, dateTime pairs by instant,
-boolean pairs false<true, anything else/mixed ⇒ type error ⇒ false).
+Comparison semantics: ``=``, ``!=``, ``IN`` and the order operators
+compile each operand once to a typed operand (``_operand``: encoded
+term, lexical value, kind, numeric value) and pick the comparison in one
+place (``_compare``) from the two kinds. A *number* (numeric constant,
+numeric builtin, arithmetic, aggregate) on either side compares values
+by castability — the other side's lexical value, so ``?x > 5`` holds for
+``"7"`` too; a non-numeric side is null ⇒ row dropped, SPARQL's
+type-error-⇒-false. Else a *string* (plain string constant, or a bare
+``STR``/``LANG``/``DATATYPE``/string-builtin result) compares lexical
+values: ``?o = "lit1"`` matches ``"lit1"@en``, ``DATATYPE(?o) =
+xsd:integer`` compares IRIs as text. Else both are *terms* and the §17.3
+operator mapping applies, dispatched on datatype: ``=``/``!=`` compare
+numeric pairs by value and everything else by term identity; order
+operators compare numeric pairs by value, plain/xsd:string pairs by
+codepoint, dateTime pairs by instant, boolean pairs false < true, and
+anything else/mixed is a type error ⇒ false (an order operator between
+a plain string constant and a term takes this path too). Numbers compare
+exactly as ``decimal(38,18)`` — 20 integer digits, so xsd:long and
+xsd:unsignedLong, and 18 fractional digits: ``"01"^^xsd:integer =
+"1"^^xsd:integer`` and 2^53 + 1 ≠ 2^53. They compare as doubles when
+either side is xsd:double/xsd:float or a bare double result (arithmetic
+and the numeric builtins stay double), and past the decimal range
+(|v| ≥ 10^20, where the decimal cast is null); digits past the 18th
+fractional one round half-up. Numeric constants keep their lexical form
+from the parser onward (``BIND(01 AS ?x)`` is ``"01"^^xsd:integer``, and
+a SERVICE body ships them as written). An unbound operand is a type
+error, whether the variable is never bound or OPTIONAL-unbound.
 A FILTER/BIND referencing a variable the pattern never binds evaluates
 it as unbound — a type error, so comparisons drop the row, ``BOUND`` is
 false, and BIND targets stay unbound — matching what a Blazegraph-backed
@@ -188,6 +206,7 @@ required, quadratic by nature; usually a query typo, so worth knowing.
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
 
@@ -199,35 +218,29 @@ from ontograph_spark.functions.graph_algo import transitive_closure
 from ontograph_spark.terms import (
     term_datatype_col,
     term_language_col,
+    term_value,
     term_value_col,
 )
 
-#: XSD numeric datatypes for the §17.3 operator-mapping dispatch —
-#: the four primitive/derived numerics the engine's literal encoder
-#: produces plus the common xsd:integer-derived types a user's data
-#: may carry (all order-comparable by value per op:numeric-less-than).
 _XSD = "http://www.w3.org/2001/XMLSchema#"
-_NUMERIC_DATATYPES = frozenset(
-    _XSD + n
-    for n in (
-        "integer",
-        "decimal",
-        "double",
-        "float",
-        "long",
-        "int",
-        "short",
-        "byte",
-        "nonNegativeInteger",
-        "nonPositiveInteger",
-        "negativeInteger",
-        "positiveInteger",
-        "unsignedLong",
-        "unsignedInt",
-        "unsignedShort",
-        "unsignedByte",
-    )
+
+
+def _typed_as(*names: str) -> str:
+    """A regex matching an encoded literal typed with one of the XSD
+    datatypes ``names`` (the term ends ``"^^<xsd:name>``)."""
+    return f'"\\^\\^<{re.escape(_XSD)}(?:{"|".join(names)})>$'
+
+
+#: the §17.3 numeric class: the four numerics the engine's literal
+#: encoder produces plus the xsd:integer-derived types a user's data may
+#: carry (all compared by value per op:numeric-equal/-less-than)
+_NUMERIC_TYPED = _typed_as(
+    "integer", "decimal", "double", "float", "long", "int", "short",
+    "byte", "nonNegativeInteger", "nonPositiveInteger",
+    "negativeInteger", "positiveInteger", "unsignedLong", "unsignedInt",
+    "unsignedShort", "unsignedByte",
 )
+_DOUBLE_TYPED = _typed_as("double", "float")
 
 
 class SparqlSyntaxError(ValueError):
@@ -569,8 +582,7 @@ class _Parser:
         if kind == "STRING":
             return ("term", self._canon_literal(text))
         if kind == "NUMBER":
-            dt = vocab.XSD_DECIMAL if "." in text else vocab.XSD_INTEGER
-            return ("term", f'"{text}"^^<{dt}>')
+            return ("term", _num_term(text))
         raise SparqlSyntaxError(f"expected term, got {text!r}")
 
     def _canon_literal(self, tok: str) -> str:
@@ -1245,7 +1257,7 @@ class _Parser:
                 op = self.next()[1]
                 node = ("arith", op, node, self._parse_mult())
             elif t is not None and t[0] == "NUMBER" and t[1][0] in "+-":
-                node = ("arith", "+", node, ("num", float(self.next()[1])))
+                node = ("arith", "+", node, ("num", self.next()[1]))
             else:
                 return node
 
@@ -1478,7 +1490,7 @@ class _Parser:
         if kind == "VAR":
             return ("var", text[1:])
         if kind == "NUMBER":
-            return ("num", float(text))
+            return ("num", text)  # the lexical form, kept exact
         if kind == "STRING":
             canon = self._canon_literal(text)
             if re.fullmatch(r'"[^"]*"', canon):
@@ -1847,26 +1859,17 @@ def _compile_expr(node, columns: set[str]) -> Column:
     if kind == "marker":
         return F.col(node[1])
     if kind == "cmp":
-        return _compile_cmp(node[1], node[2], node[3], columns)
+        return _compare(
+            node[1], _operand(node[2], columns), _operand(node[3], columns)
+        )
     if kind == "in":
-        lhs, items = node[1], node[2]
-        kinds = {a[0] for a in items}
-        if len(kinds) > 1:
-            # mixed constant kinds: IN is per-item equality (SPARQL
-            # §17.4.1.9) — one mode for the whole list would make items
-            # of the other kinds unmatchable
-            cond = F.lit(False)
-            for item in items:
-                cond = cond | _compile_cmp("=", lhs, item, columns)
-            return cond
-        if kinds == {"num"}:
-            mode = "num"
-        elif kinds == {"str"}:
-            mode = "value"
-        else:
-            mode = "term"
-        lc = _cmp_side(lhs, mode, columns)
-        return lc.isin([a[1] for a in items])
+        # per-item equality (SPARQL §17.4.1.9), error-propagating ||
+        lhs = _operand(node[1], columns)
+        return functools.reduce(
+            Column.__or__,
+            [_compare("=", lhs, _operand(a, columns)) for a in node[2]],
+            F.lit(False),
+        )
     if kind == "tfunc":
         name, var = node[1], node[2]
         if var not in columns:
@@ -1882,9 +1885,8 @@ def _compile_expr(node, columns: set[str]) -> Column:
         if name == "ISBLANK":
             return F.lit(False)  # blank nodes out of scope (SURVEY §2.1)
         # ISNUMERIC: a literal whose value parses as a number
-        return col.startswith('"') & term_value_col(col).try_cast(
-            "double"
-        ).isNotNull()
+        num = _as_double(term_value_col(col))
+        return col.startswith('"') & num.isNotNull()
     if kind == "aggexpr":
         raise SparqlSyntaxError(
             "aggregate calls are only valid inside HAVING constraints"
@@ -1931,18 +1933,18 @@ def _string_operand(node, columns: set[str]) -> Column:
     STRBEFORE/STRAFTER) applied recursively — all plain Column
     expressions, whole-stage codegen, no UDFs."""
     kind = node[0]
-    if kind == "var":
-        if node[1] not in columns:
+    if kind in ("var", "acc"):
+        if node[-1] not in columns:
             # never-bound variable: evaluating it is a type error
             # (SPARQL §17.2) — a null column propagates through every
             # string builtin and comparison to null ⇒ FILTER drops the
             # row, BIND leaves the target unbound
             return F.lit(None).cast("string")
-        return term_value_col(F.col(node[1]))
-    if kind == "acc":
-        if node[2] not in columns:
-            return F.lit(None).cast("string")  # type error ⇒ null
-        return _ACCESSORS[node[1]](F.col(node[2]))
+        col = F.col(node[-1])
+        fn = term_value_col if kind == "var" else _ACCESSORS[node[1]]
+        # an unbound (null) term is the same type error, not the
+        # codec's "" for a null input
+        return F.when(col.isNotNull(), fn(col))
     if kind == "str":
         return F.lit(node[1])
     if kind == "concat":
@@ -1980,9 +1982,9 @@ def _string_operand(node, columns: set[str]) -> Column:
             return F.regexp_replace(inner, consts[0], consts[1])
         if name == "SUBSTR":
             # SPARQL §17.4.3.3: 1-based start, optional length
-            start = int(consts[0])
-            if len(consts) == 2:
-                return inner.substr(F.lit(start), F.lit(int(consts[1])))
+            start, *length = (int(float(c)) for c in consts)
+            if length:
+                return inner.substr(F.lit(start), F.lit(length[0]))
             return inner.substr(F.lit(start), F.length(inner))
         needle = consts[0]
         if name == "STRBEFORE":
@@ -2021,6 +2023,18 @@ def _encode_numeric(val: Column) -> Column:
     )
 
 
+def _num_term(text: str) -> str:
+    """A SPARQL numeric literal token as its term, lexical form kept."""
+    dt = vocab.XSD_DECIMAL if "." in text else vocab.XSD_INTEGER
+    return f'"{text}"^^<{dt}>'
+
+
+def _as_double(lex: Column) -> Column:
+    """A lexical form's value as a double (``try_cast`` — non-numeric ⇒
+    null): arithmetic's value, and comparisons' for xsd:double/float."""
+    return lex.try_cast("double")
+
+
 def _numeric_operand(node, columns: set[str]) -> Column:
     """An expression operand as a double Column: vars via the literal's
     numeric value (``try_cast`` — non-numeric ⇒ null ⇒ row dropped,
@@ -2034,9 +2048,9 @@ def _numeric_operand(node, columns: set[str]) -> Column:
         if node[1] not in columns:
             # never-bound ⇒ type error ⇒ null (row dropped / unbound)
             return F.lit(None).cast("double")
-        return term_value_col(F.col(node[1])).try_cast("double")
+        return _as_double(term_value_col(F.col(node[1])))
     if kind == "num":
-        return F.lit(node[1])
+        return F.lit(float(node[1]))
     if kind == "nfunc":
         return F.length(_string_operand(node[2], columns)).cast("double")
     if kind == "mathfunc":
@@ -2073,7 +2087,7 @@ def _numeric_operand(node, columns: set[str]) -> Column:
         # its numeric value is the literal's lexical form (try_cast —
         # a non-numeric constant yields null ⇒ row dropped, the engine's
         # comparison convention)
-        return term_value_col(F.lit(node[1])).try_cast("double")
+        return _as_double(F.lit(term_value(node[1])))
     if kind == "dtfunc":
         ts = F.to_timestamp(term_value_col(_term_operand(node[2], columns)))
         fn = {
@@ -2118,10 +2132,7 @@ def _bind_value(node, columns: set[str]) -> Column:
     if kind == "str":
         return F.lit(f'"{node[1]}"')
     if kind == "num":
-        v = node[1]
-        if float(v).is_integer():
-            return F.lit(f'"{int(v)}"^^<{vocab.XSD_INTEGER}>')
-        return F.lit(f'"{v}"^^<{vocab.XSD_DECIMAL}>')
+        return F.lit(_num_term(node[1]))
     if kind == "acc":
         inner = _string_operand(node, columns)
         if node[1] == "DATATYPE":
@@ -2198,163 +2209,133 @@ def _bind_value(node, columns: set[str]) -> Column:
     raise SparqlSyntaxError(f"{node!r} is not a BIND value expression")
 
 
-def _operand_mode(node) -> str:
-    modes = {
-        "num": "num",
-        "str": "value",
-        "term": "term",
-        "var": "var",
-        "acc": "acc",
-        "sxfunc": "acc",
-        "hashfunc": "acc",
-        "nfunc": "num",
-        "mathfunc": "num",
-        "dtfunc": "num",
-        "arith": "num",
-        "neg": "num",
-        "irifunc": "term",
-        "strdt": "term",
-        "strlang": "term",
-        # term-valued composites behave like variables: the OTHER side
-        # picks the comparison mode (numeric constant ⇒ values as
-        # doubles, string ⇒ values, term ⇒ encoded terms)
-        "coalesce": "var",
-        "if": "var",
-        "concat": "var",
-        "hcol": "raw",
-    }
-    if node[0] not in modes:
-        raise SparqlSyntaxError(f"{node!r} cannot appear in a comparison")
-    return modes[node[0]]
+#: the exact value of the xsd:integer/decimal family: 20 integer digits
+#: (xsd:long and xsd:unsignedLong fit) and 18 fractional digits
+_DEC = "decimal(38,18)"
+_CMP = {
+    "=": Column.__eq__,
+    "!=": Column.__ne__,
+    "<": Column.__lt__,
+    "<=": Column.__le__,
+    ">": Column.__gt__,
+    ">=": Column.__ge__,
+}
 
 
-def _cmp_side(node, mode: str, columns: set[str]) -> Column:
+@dataclass(frozen=True)
+class _Operand:
+    """A comparison operand, compiled once by :func:`_operand`."""
+
+    #: "number" (a numeric constant or builtin), "string" (a plain
+    #: string constant or a bare string builtin) or "term" (anything
+    #: whose datatype travels with it)
+    kind: str
+    #: the lexical value (None for a bare numeric result)
+    lex: Column | None
+    #: the encoded term (None for a bare value)
+    enc: Column | None
+    #: the exact value as ``_DEC``: null for an xsd:double/float term,
+    #: a non-number or past the decimal range; None for a bare double
+    dec: Column | None
+    #: the value as a double, arithmetic's value
+    dbl: Column
+
+
+def _typed(kind: str, lex: Column, enc: Column | None = None) -> _Operand:
+    """An operand whose numeric value is read from its lexical form."""
+    dec = lex.try_cast(_DEC)
+    if enc is not None:
+        dec = F.when(~enc.rlike(_DOUBLE_TYPED), dec)
+    return _Operand(kind, lex, enc, dec, _as_double(lex))
+
+
+def _operand(node, columns: set[str]) -> _Operand:
+    """The one comparison-operand compiler: every ``=``/``!=``/order/IN
+    operand becomes a typed operand here."""
     kind = node[0]
-    if kind == "hcol":
-        # a hidden HAVING aggregate column — already a numeric Column
-        return F.col(node[1])
-    if kind in ("acc", "sxfunc", "hashfunc"):
-        return _string_operand(node, columns)
-    if kind in ("nfunc", "mathfunc", "dtfunc", "arith", "neg"):
-        return _numeric_operand(node, columns)
-    if kind in ("irifunc", "strdt", "strlang"):
-        return _bind_value(node, columns)
-    if kind in ("coalesce", "if", "concat"):
-        val = _bind_value(node, columns)
-        if mode in ("num", "raw"):
-            return term_value_col(val).try_cast("double")
-        if mode in ("value", "acc"):
-            return term_value_col(val)
-        return val
-    if kind == "var":
-        if node[1] not in columns:
-            # never-bound ⇒ type error: null compares to nothing, so
-            # the surrounding comparison is null ⇒ effective false
-            return F.lit(None).cast(
-                "double" if mode in ("num", "raw") else "string"
-            )
-        col = F.col(node[1])
-        if mode in ("num", "raw"):
-            return term_value_col(col).try_cast("double")
-        if mode in ("value", "acc"):
-            return term_value_col(col)
-        return col
     if kind == "num":
-        return F.lit(node[1])
-    if kind == "str":
-        return F.lit(node[1])
-    if mode == "acc":
-        # accessor results are bare strings (LANG tag, DATATYPE uri,
-        # STR lexical form) — strip the IRI constant's angle brackets
-        return F.lit(node[1][1:-1] if node[1].startswith("<") else node[1])
-    return F.lit(node[1])  # full encoded term
-
-
-def _compile_cmp(op: str, lhs, rhs, columns: set[str]) -> Column:
-    modes = {_operand_mode(lhs), _operand_mode(rhs)}
-    if modes == {"var"}:
-        mode = "term"
-    elif "raw" in modes:
-        mode = "raw"
-    elif "acc" in modes:
-        mode = "acc"
-    elif "num" in modes:
-        mode = "num"
-    elif "value" in modes:
-        mode = "value"
+        return _typed("number", F.lit(node[1]))
+    if kind in ("nfunc", "mathfunc", "dtfunc", "arith", "neg"):
+        num = _numeric_operand(node, columns)
+        return _Operand("number", None, None, None, num)
+    if kind == "hcol":
+        # a hidden HAVING aggregate column: numeric, except
+        # GROUP_CONCAT (a bare string) and SAMPLE (an encoded term)
+        col = F.col(node[1])
+        if node[2] == "GROUP_CONCAT":
+            return _typed("string", col)
+        if node[2] != "SAMPLE":
+            return _Operand("number", None, None, None, col)
+        enc = col
+    elif kind == "str":
+        return _typed("string", F.lit(node[1]), F.lit(f'"{node[1]}"'))
+    elif kind in ("acc", "sxfunc", "hashfunc"):
+        return _typed("string", _string_operand(node, columns))
+    elif kind == "term":
+        return _typed("term", F.lit(term_value(node[1])), F.lit(node[1]))
+    elif kind in (
+        "var", "irifunc", "strdt", "strlang", "coalesce", "if", "concat"
+    ):
+        enc = _bind_value(node, columns)
     else:
-        mode = "term"
-    if op in ("<", "<=", ">", ">=") and modes <= {"var", "term", "value"}:
-        # SPARQL §17.3 operator mapping for order comparisons between
-        # term-shaped operands (variables, term constants, string
-        # constants — anything whose datatype travels with it),
-        # dispatched on DATATYPE (not castability): numeric <op>
-        # numeric compares values; plain / xsd:string pairs compare
-        # codepoints (so "10" < "9" is TRUE — the Blazegraph-backed
-        # reference's fn:compare answer); dateTime pairs compare
-        # instants; boolean pairs false < true; any other or mixed
-        # combination (IRI, lang-tagged, xsd:string vs numeric/boolean)
-        # is a type error ⇒ NULL ⇒ row dropped. Numeric-constant and
-        # numeric-builtin operands keep the value-mode fast path below
-        # (the engine's documented castability convention).
-        def _enc_term(node) -> Column:
-            if node[0] == "str":
-                return F.lit(f'"{node[1]}"')
-            return _cmp_side(node, "term", columns)
+        raise SparqlSyntaxError(f"{node!r} cannot appear in a comparison")
+    # an unbound term has no lexical value (the codec would read "")
+    return _typed("term", F.when(enc.isNotNull(), term_value_col(enc)), enc)
 
-        lc = _enc_term(lhs)
-        rc = _enc_term(rhs)
-        lv = term_value_col(lc)
-        rv = term_value_col(rc)
-        ln = lv.try_cast("double")
-        rn = rv.try_cast("double")
 
-        def _vcmp(a, b):
-            return {"<": a < b, "<=": a <= b, ">": a > b, ">=": a >= b}[op]
+def _num_cmp(op: str, l: _Operand, r: _Operand) -> Column:
+    """Numbers compare as ``_DEC`` when both sides have an exact value,
+    else (xsd:double/float, a bare double, past the decimal range) as
+    doubles."""
+    out = _CMP[op](l.dbl, r.dbl)
+    if l.dec is None or r.dec is None:
+        return out
+    return F.coalesce(_CMP[op](l.dec, r.dec), out)
 
-        def _classes(c, dt, lang):
-            lit = c.startswith('"')
-            return (
-                lit & dt.isin(list(_NUMERIC_DATATYPES)),
-                lit
-                & (lang == F.lit(""))
-                & ((dt == F.lit("")) | (dt == F.lit(vocab.XSD_STRING))),
-                lit & (dt == F.lit(vocab.XSD_DATETIME)),
-                lit & (dt == F.lit(vocab.XSD_BOOLEAN)),
-            )
 
-        l_num, l_str, l_ts, l_bool = _classes(
-            lc, term_datatype_col(lc), term_language_col(lc)
+def _compare(op: str, l: _Operand, r: _Operand) -> Column:
+    """The one comparison policy. A number on either side compares
+    values by castability (a non-numeric side is null ⇒ row dropped);
+    else a string on either side compares lexical values (order
+    operators between two encoded terms excepted); else the §17.3
+    operator mapping on the two terms' datatype classes."""
+    fn = _CMP[op]
+    kinds = {l.kind, r.kind}
+    if "number" in kinds:
+        return _num_cmp(op, l, r)
+    if "string" in kinds and (
+        op in ("=", "!=") or l.enc is None or r.enc is None
+    ):
+        return fn(l.lex, r.lex)
+    numeric = l.enc.rlike(_NUMERIC_TYPED) & r.enc.rlike(_NUMERIC_TYPED)
+    if op in ("=", "!="):
+        # numeric pairs by value (an ill-typed lexical form falls back
+        # to term identity), everything else by term identity
+        same = fn(l.enc, r.enc)
+        return F.when(
+            numeric, F.coalesce(_num_cmp(op, l, r), same)
+        ).otherwise(same)
+
+    def both(regex: str) -> Column:
+        return l.enc.rlike(regex) & r.enc.rlike(regex)
+
+    # plain literals, or typed xsd:string (never lang-tagged)
+    plain = '^"(?s:.*)"$|' + _typed_as("string")
+    # no terminal otherwise: an unmatched (mixed/other/unbound)
+    # combination yields NULL — SPARQL's type error, which Spark's
+    # Kleene logic propagates exactly like §17.2's error algebra
+    return (
+        F.when(numeric, _num_cmp(op, l, r))
+        .when(both(plain), fn(l.lex, r.lex))
+        .when(
+            both(_typed_as("dateTime")),
+            fn(F.to_timestamp(l.lex), F.to_timestamp(r.lex)),
         )
-        r_num, r_str, r_ts, r_bool = _classes(
-            rc, term_datatype_col(rc), term_language_col(rc)
+        .when(
+            both(_typed_as("boolean")),
+            fn(l.lex == F.lit("true"), r.lex == F.lit("true")),
         )
-        # no terminal otherwise: an unmatched (mixed/other/unbound)
-        # combination yields NULL — SPARQL's type error, which Spark's
-        # Kleene logic propagates exactly like §17.2's error algebra
-        # (dropped by a top-level FILTER, still dropped under ``!``,
-        # absorbed by a true ``||`` branch)
-        return (
-            F.when(l_num & r_num, _vcmp(ln, rn))
-            .when(l_str & r_str, _vcmp(lv, rv))
-            .when(
-                l_ts & r_ts, _vcmp(F.to_timestamp(lv), F.to_timestamp(rv))
-            )
-            .when(
-                l_bool & r_bool,
-                _vcmp(lv == F.lit("true"), rv == F.lit("true")),
-            )
-        )
-    lc = _cmp_side(lhs, mode, columns)
-    rc = _cmp_side(rhs, mode, columns)
-    return {
-        "=": lc == rc,
-        "!=": lc != rc,
-        "<": lc < rc,
-        "<=": lc <= rc,
-        ">": lc > rc,
-        ">=": lc >= rc,
-    }[op]
+    )
 
 
 def _exists_join(
@@ -2614,13 +2595,13 @@ def _compile_group_nn(
                 df = quads.sparkSession.range(1).select(
                     _bind_value(expr, set()).alias(var)
                 )
+                nullable.add(var)
             else:
                 if var in df.columns:
                     raise SparqlSyntaxError(
                         f"BIND reassigns already-bound ?{var}"
                     )
-                df = df.withColumn(var, _bind_value(expr, set(df.columns)))
-            nullable.add(var)
+                df = _extend(df, var, expr, nullable)
         elif kind == "optional":
             if df is None:
                 raise SparqlSyntaxError(
@@ -2678,25 +2659,6 @@ def _compile_group_nn(
     return df, nullable
 
 
-def _expr_vars(node) -> set[str]:
-    """All variable names referenced anywhere in an expression AST."""
-    if not isinstance(node, tuple):
-        return set()
-    kind = node[0]
-    if kind == "var" or kind == "bound":
-        return {node[1]}
-    if kind in ("acc", "tfunc"):
-        return {node[2]}
-    out: set[str] = set()
-    for part in node[1:]:
-        if isinstance(part, tuple):
-            out |= _expr_vars(part)
-        elif isinstance(part, list):
-            for p in part:
-                out |= _expr_vars(p)
-    return out
-
-
 def _drop_blank_cols(df: DataFrame) -> DataFrame:
     """Project away query-blank-node columns (``__bn_*``): they join
     like variables inside their group but are never visible in results
@@ -2745,7 +2707,7 @@ def _order_cols(df: DataFrame, order: list[tuple[tuple, bool]]) -> list[Column]:
                     .otherwise(F.lit(2))
                 )
                 cols.append(tier.asc() if asc else tier.desc())
-                num = term_value_col(c).try_cast("double")
+                num = _as_double(term_value_col(c))
                 cols.append(
                     num.asc_nulls_first() if asc else num.desc_nulls_last()
                 )
@@ -2848,14 +2810,27 @@ def _agg_column(
 def _rewrite_having(expr, hidden: list):
     """Replace each ("aggexpr", func, var, distinct, sep) node in a
     HAVING constraint with a hidden aggregate column reference
-    ("hcol", name), collecting the aggregate specs to compute."""
+    ("hcol", name, func), collecting the aggregate specs to compute."""
     if not isinstance(expr, tuple):
         return expr
     if expr[0] == "aggexpr":
         name = f"__h{len(hidden)}"
         hidden.append((name, expr[1], expr[2], expr[3], expr[4]))
-        return ("hcol", name)
+        return ("hcol", name, expr[1])
     return tuple([expr[0]] + [_rewrite_having(p, hidden) for p in expr[1:]])
+
+
+def _extend(df: DataFrame, var: str, expr, nullable: set[str]) -> DataFrame:
+    """Bind ``expr`` to the new column ``var`` (§18.2.1 Extend). An error
+    leaves ``var`` unbound, so ``var`` joins ``nullable`` (downstream
+    joins need the compat treatment) unless ``expr`` cannot evaluate to
+    NULL: a constant, or a bound variable that is never unbound."""
+    never_null = expr[0] in ("num", "str", "term") or (
+        expr[0] == "var" and expr[1] in df.columns and expr[1] not in nullable
+    )
+    if not never_null:
+        nullable.add(var)
+    return df.withColumn(var, _bind_value(expr, set(df.columns)))
 
 
 def _compile_select(
@@ -2880,7 +2855,7 @@ def _compile_select(
         # GROUP BY (expr AS ?v): bind the computed key before grouping
         if var in df.columns:
             raise SparqlSyntaxError(f"GROUP BY key rebinds bound ?{var}")
-        df = df.withColumn(var, _bind_value(expr, set(df.columns)))
+        df = _extend(df, var, expr, nullable)
     out_null: set[str] = set()
     deferred_proj: list[Column] | None = None
     agg_proj = False
@@ -2967,19 +2942,9 @@ def _compile_select(
         for alias, expr in q.select_binds:
             if alias in df.columns:
                 raise SparqlSyntaxError(f"SELECT expression rebinds ?{alias}")
-            df = df.withColumn(alias, _bind_value(expr, set(df.columns)))
-        bound_aliases = {alias for alias, _ in q.select_binds}
+            df = _extend(df, alias, expr, nullable)
         out_null = {
-            v
-            for v in q.proj_order
-            if (v not in df.columns or v in nullable) and v not in bound_aliases
-        }
-        # an expression over a possibly-unbound variable is itself
-        # possibly null — downstream joins need the compat treatment
-        out_null |= {
-            alias
-            for alias, expr in q.select_binds
-            if _expr_vars(expr) & nullable
+            v for v in q.proj_order if v not in df.columns or v in nullable
         }
         cols = [
             F.col(v) if v in df.columns else F.lit(None).cast("string").alias(v)

@@ -11,6 +11,7 @@ from ontograph_spark.query.federation import (
     BOUND_JOIN_MAX,
     _mandatory_vars,
     path_to_sparql,
+    service_query_text,
     term_to_surface,
 )
 from ontograph_spark.query.sparql import _Parser
@@ -94,3 +95,16 @@ def test_bound_join_threshold_and_nullable_cells(spark):
     df2 = spark.createDataFrame([("x",)], "zz string")
     assert local_bindings_for_bound_join(df2, body) is None
     assert BOUND_JOIN_MAX > 0
+
+
+def test_service_numeric_constants_ship_as_written():
+    """A FILTER's numeric constants ship in their lexical form: a float
+    round trip would send 9007199254740993 as 9007199254740992 (2^53 + 1
+    has no double) and rewrite 05 / 1.50 / +2."""
+    body = _service_body(
+        "SELECT * WHERE { SERVICE <http://x/s> { ?a <u:p> ?b "
+        "FILTER(?b = 9007199254740993 || ?b IN (05, 1.50, +2)) } }"
+    )
+    text, _ = service_query_text(body)
+    assert "(?b = 9007199254740993)" in text
+    assert "(?b IN (05, 1.50, +2))" in text

@@ -263,3 +263,38 @@ def test_resumable_construction_releases_caches(spark, tmp_path, small_input):
     ms = construct_resumable(spark, df, str(tmp_path / "kg"), GRAPH, buckets=3)
     assert [m["skipped"] for m in ms] == [False] * 3
     assert persistent() - before == set()
+
+
+def test_canonical_mapping_distributed_path_matches_union_find(
+    spark, monkeypatch
+):
+    """``canonical_mapping``'s distributed path (label propagation plus
+    the representative choice), forced by a driver limit of 0, returns
+    the driver path's union-find mapping on seeded alias graphs. Each
+    graph also carries a 3-cycle and a component with two edge targets,
+    where the smallest target (not the smallest member) must win."""
+    import random
+
+    from ontograph_spark.functions import graph_algo
+    from ontograph_spark.pipeline.canon import (
+        canonical_mapping,
+        union_find_mapping,
+    )
+
+    monkeypatch.setattr(graph_algo, "DRIVER_EDGE_LIMIT", 0)
+    nodes = [f"<u:n{i}>" for i in range(10)]
+    fixed = {
+        ("<u:c0>", "<u:c1>"), ("<u:c1>", "<u:c2>"), ("<u:c2>", "<u:c0>"),
+        ("<u:a0>", "<u:t1>"), ("<u:a0>", "<u:t0>"), ("<u:a1>", "<u:t1>"),
+    }
+    for seed in range(3):
+        rng = random.Random(seed)
+        edges = sorted(
+            fixed
+            | {tuple(rng.sample(nodes, 2)) for _ in range(rng.randint(3, 12))}
+        )
+        df = spark.createDataFrame(edges, "src string, dst string")
+        got = sorted(tuple(r) for r in canonical_mapping(df).collect())
+        want = sorted(union_find_mapping(edges))
+        assert ("<u:a0>", "<u:t0>") in want and ("<u:t1>", "<u:t0>") in want
+        assert got == want, f"seed {seed}: {edges}"

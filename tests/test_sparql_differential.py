@@ -6,9 +6,10 @@ wrong-answer-hunting item called out — property paths (incl. under
 GRAPH ?var and feeding/inside OPTIONAL), MINUS, aggregates (incl.
 GROUP_CONCAT/SAMPLE/DISTINCT combos), positionally-placed BIND,
 FILTER comparisons, never-bound-variable error semantics, VALUES with
-UNDEF, and ORDER BY cross-kind tiers — with a SEEDED deterministic
-generator (plain ``random.Random(seed)``; every failure reproduces from
-the printed case number alone).
+UNDEF, ORDER BY cross-kind tiers, and numeric comparisons over
+non-canonical lexical forms (against an exact decimal oracle) — with a
+SEEDED deterministic generator (plain ``random.Random(seed)``; every
+failure reproduces from the printed case number alone).
 
 Each case: a random small quad set (set semantics, like the stores), a
 random query exercising exactly one feature over a random BGP, evaluated
@@ -1156,3 +1157,177 @@ def test_nested_exists_over_nullable_match_naive(spark):
         want = Counter((m["x"], m["y"], m.get("z")) for m in kept)
         got = _engine_bag(spark, triples, q, ["x", "y", "z"])
         assert got == want, f"case {i} seed {seed}: {q!r} over {triples}"
+
+
+# ---------------------------------------------------------------------------
+# numeric values over non-canonical lexical forms (INSERT DATA → FILTER)
+# ---------------------------------------------------------------------------
+
+#: (surface form in INSERT DATA / FILTER, encoded term) — the same value
+#: written several ways, integers past 2^53, xsd:long's maximum, and
+#: decimals that differ only at the 16th significant digit
+_LEX_FORMS = [
+    (f'"01"^^<{_XSD}integer>', f'"01"^^<{_XSD}integer>'),
+    ("1", f'"1"^^<{_XSD}integer>'),
+    ("1.0", f'"1.0"^^<{_XSD}decimal>'),
+    (f'"+5"^^<{_XSD}integer>', f'"+5"^^<{_XSD}integer>'),
+    ("5", f'"5"^^<{_XSD}integer>'),
+    ("5.0", f'"5.0"^^<{_XSD}decimal>'),
+    (f'"5"^^<{_XSD}decimal>', f'"5"^^<{_XSD}decimal>'),
+    ('"5"', '"5"'),
+    (f'"5"^^<{_XSD}string>', f'"5"^^<{_XSD}string>'),
+    ("-0", f'"-0"^^<{_XSD}integer>'),
+    ("0.0", f'"0.0"^^<{_XSD}decimal>'),
+    ("9007199254740992", f'"9007199254740992"^^<{_XSD}integer>'),
+    ("9007199254740993", f'"9007199254740993"^^<{_XSD}integer>'),
+    (
+        f'"9007199254740993.0"^^<{_XSD}decimal>',
+        f'"9007199254740993.0"^^<{_XSD}decimal>',
+    ),
+    (
+        f'"9223372036854775807"^^<{_XSD}long>',
+        f'"9223372036854775807"^^<{_XSD}long>',
+    ),
+    ("0.1234567890123456", f'"0.1234567890123456"^^<{_XSD}decimal>'),
+    ("0.1234567890123457", f'"0.1234567890123457"^^<{_XSD}decimal>'),
+    ("0.12345678901234560", f'"0.12345678901234560"^^<{_XSD}decimal>'),
+]
+
+_NUMERIC_CLASS = {_XSD + n for n in ("integer", "decimal", "long")}
+
+
+def _exact(lex: str):
+    """The ``decimal.Decimal`` value of a lexical form, None when it is
+    not a number."""
+    import decimal
+
+    try:
+        return decimal.Decimal(lex)
+    except decimal.InvalidOperation:
+        return None
+
+
+def naive_value_cmp3(op, x, y):
+    """Three-valued comparison of two operands, each ``("num", text)``
+    (a bare numeric constant), ``("str", encoded)`` (a plain string
+    constant) or ``("term", encoded)``, by the engine's documented
+    policy with an exact decimal oracle: a bare number on either side
+    compares both lexical values by castability (a non-number is an
+    error); a string constant under ``=``/``!=`` compares lexical values;
+    otherwise two numeric-typed terms compare by value, ``=``/``!=`` are
+    term identity, and order operators compare plain/xsd:string pairs by
+    codepoint and err on any other pair."""
+    cmp = {
+        "=": lambda a, b: a == b,
+        "!=": lambda a, b: a != b,
+        "<": lambda a, b: a < b,
+        "<=": lambda a, b: a <= b,
+        ">": lambda a, b: a > b,
+        ">=": lambda a, b: a >= b,
+    }[op]
+
+    def lex(o):
+        return o[1] if o[0] == "num" else _lex(o[1])
+
+    if x[0] == "num" or y[0] == "num":
+        a, b = _exact(lex(x)), _exact(lex(y))
+        return None if a is None or b is None else cmp(a, b)
+    if "str" in (x[0], y[0]) and op in ("=", "!="):
+        return cmp(lex(x), lex(y))
+    xd, yd = _dtype(x[1]), _dtype(y[1])
+    if xd in _NUMERIC_CLASS and yd in _NUMERIC_CLASS:
+        return cmp(_exact(lex(x)), _exact(lex(y)))
+    if op in ("=", "!="):
+        return cmp(x[1], y[1])
+    if {xd, yd} <= {"", _XSD + "string"}:
+        return cmp(lex(x), lex(y))
+    return None
+
+
+def _naive_in3(x, items):
+    """``x IN (items)`` as SPARQL's ``||`` of ``=``: true if one item is
+    equal, else an error if one comparison errs, else false."""
+    got = [naive_value_cmp3("=", x, i) for i in items]
+    if True in got:
+        return True
+    return None if None in got else False
+
+
+def test_numeric_lexical_forms_match_decimal_oracle(spark):
+    """Numeric literals in non-canonical lexical forms ("01", "+5",
+    "5.0"^^xsd:decimal vs "5", integers past 2^53, decimals that differ
+    past the 15th significant digit) inserted through INSERT DATA, then
+    compared var-to-var and var-to-constant (a term, a plain string or a
+    bare number, on either side) with all six operators, and through IN
+    / NOT IN: the engine's survivors must equal an exact
+    ``decimal.Decimal`` evaluation."""
+    from ontograph_spark.query import LocalSparqlEndpoint
+    from ontograph_spark.store import MemoryQuadStore
+
+    ops = ["=", "!=", "<", "<=", ">", ">="]
+
+    def constant(rng):
+        surface, term = rng.choice(_LEX_FORMS)
+        if surface[0] != '"' and rng.random() < 0.5:
+            return surface, ("num", surface)
+        return term, ("str" if term == '"5"' else "term", term)
+
+    for i, seed in enumerate(_seeds("numlex")):
+        rng = random.Random(seed)
+        data = rng.sample(_LEX_FORMS, rng.randint(2, 6))
+        terms = {f"<u:s{k}>": ("term", t) for k, (_, t) in enumerate(data)}
+        endpoint = LocalSparqlEndpoint(
+            spark, lambda uri: MemoryQuadStore(spark, uri)
+        )
+        endpoint.update(
+            "INSERT DATA { GRAPH <u:g> { "
+            + " ".join(
+                f"{s} <u:v> {surface} ." for s, (surface, _) in zip(terms, data)
+            )
+            + " } }"
+        )
+        shape = rng.choice(["var", "const", "in"])
+        op = rng.choice(ops)
+        if shape == "var":
+            cols = ["a", "b"]
+            body = f"?a <u:v> ?x . ?b <u:v> ?y FILTER(?x {op} ?y)"
+            want = Counter(
+                (a, b)
+                for a, x in terms.items()
+                for b, y in terms.items()
+                if naive_value_cmp3(op, x, y) is True
+            )
+        elif shape == "const":
+            cols = ["a"]
+            text, c = constant(rng)
+            if rng.random() < 0.5:
+                body = f"?a <u:v> ?x FILTER({text} {op} ?x)"
+                want = Counter(
+                    (a,) for a, x in terms.items()
+                    if naive_value_cmp3(op, c, x) is True
+                )
+            else:
+                body = f"?a <u:v> ?x FILTER(?x {op} {text})"
+                want = Counter(
+                    (a,) for a, x in terms.items()
+                    if naive_value_cmp3(op, x, c) is True
+                )
+        else:
+            cols = ["a"]
+            picked = [constant(rng) for _ in range(rng.randint(1, 3))]
+            neg = rng.random() < 0.4
+            body = (
+                f"?a <u:v> ?x FILTER(?x {'NOT IN' if neg else 'IN'} "
+                f"({', '.join(t for t, _ in picked)}))"
+            )
+            want = Counter()
+            for a, x in terms.items():
+                r = _naive_in3(x, [c for _, c in picked])
+                if neg and r is not None:
+                    r = not r
+                if r is True:
+                    want[(a,)] += 1
+        q = f"SELECT {' '.join('?' + c for c in cols)} WHERE {{ {body} }}"
+        res = endpoint.query(q)["results"]["bindings"]
+        got = Counter(tuple(f"<{b[c]['value']}>" for c in cols) for b in res)
+        assert got == want, f"case {i} seed {seed}: {q!r} over {data}"

@@ -722,6 +722,25 @@ def test_filter_in_and_not_in(store):
     assert {r[0] for r in sparql_select(store.df(), q).collect()} == {f"<{U}#c>"}
 
 
+@pytest.mark.parametrize(
+    "flt, keeps_c",
+    [
+        ('?l != "x"', True),
+        ('?l NOT IN ("x")', True),
+        ('STR(?l) = ""', False),
+        ('LANG(?l) = ""', True),
+    ],
+)
+def test_optional_unbound_operand_is_a_type_error(store, flt, keeps_c):
+    """An OPTIONAL-unbound operand errs like a never-bound one (§17.2):
+    only <c>, whose ?l is bound to "lit1", can pass; the unbound ?l of
+    <a> and <b> used to read as "", so ``!=`` and ``= ""`` kept them."""
+    q = f"""SELECT ?o WHERE {{ <{U}> <{U}#rel-1> ?o .
+        OPTIONAL {{ ?o <{U}#rel-3> ?l }} FILTER({flt}) }}"""
+    want = {f"<{U}#c>"} if keeps_c else set()
+    assert {r[0] for r in sparql_select(store.df(), q).collect()} == want
+
+
 def test_filter_type_tests(store):
     base = f"SELECT ?o WHERE {{ ?s ?p ?o . FILTER(%s(?o)) }}"
     iri = sparql_select(store.df(), base % "isIRI").count()
@@ -794,6 +813,40 @@ def test_subquery_must_be_select(store):
             store.df(),
             "SELECT ?s WHERE { { ASK { ?s ?p ?o } } }",
         )
+
+
+def _unbound_alias_df(spark):
+    return spark.createDataFrame(
+        [("<u:s>", "<u:p>", "<u:o>", "g"), ("<u:s>", "<u:q>", '"k"', "g")],
+        "subj string, pred string, obj string, graph string",
+    )
+
+
+@pytest.mark.parametrize(
+    "expr",
+    ["STR(?never)", "(?o + 1)"],  # never-bound; a type error on an IRI
+)
+def test_subquery_unbound_select_expression_stays_compatible(spark, expr):
+    """A SELECT-expression alias that evaluates to an error is unbound
+    (§18.2.1 Extend); the parent's join on it keeps the row under the
+    compatibility rule instead of equi-joining on NULL."""
+    q = f"""SELECT ?s ?o ?x WHERE {{
+        ?s <u:q> ?x .
+        {{ SELECT ?o ({expr} AS ?x) WHERE {{ ?t <u:p> ?o }} }}
+    }}"""
+    got = [tuple(r) for r in sparql_select(_unbound_alias_df(spark), q).collect()]
+    assert got == [("<u:s>", "<u:o>", '"k"')]
+
+
+def test_subquery_unbound_group_key_stays_compatible(spark):
+    """The same rule for a computed ``GROUP BY (expr AS ?v)`` key."""
+    q = """SELECT ?s ?x ?n WHERE {
+        ?s <u:q> ?x .
+        { SELECT ?x (COUNT(*) AS ?n) WHERE { ?t <u:p> ?o }
+          GROUP BY (STR(?never) AS ?x) }
+    }"""
+    got = [tuple(r) for r in sparql_select(_unbound_alias_df(spark), q).collect()]
+    assert got == [("<u:s>", '"k"', 1)]
 
 
 # ---------------------------------------------------------------------------

@@ -8,10 +8,12 @@ deterministic choice, so reruns are idempotent).
 Algorithm: iterative minimum-label propagation on DataFrames — each round
 every node adopts the smallest label among itself and its neighbors;
 ``localCheckpoint`` truncates lineage per round. Convergence takes
-O(diameter) rounds; alias graphs are star-shaped (diameter ≤ 2), and
-``max_iterations`` bounds pathological chains. For adversarially deep
-graphs swap in the large-star/small-star variant — the driver loop and
-checkpoint discipline stay the same. No GraphFrames dependency.
+O(diameter) rounds; alias graphs are star-shaped (diameter ≤ 2). The loop
+runs until no label changes, which always terminates: labels only
+decrease, and each is one of finitely many node ids. A deep chain costs one
+round per hop; for adversarially deep graphs swap in the
+large-star/small-star variant — the driver loop and checkpoint discipline
+stay the same. No GraphFrames dependency.
 """
 
 from __future__ import annotations
@@ -22,9 +24,7 @@ from pyspark.sql import functions as F
 from ontograph_spark.functions import graph_algo
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 12
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """``(src, dst)`` string edges → ``(node, component)`` where component
     is the min node id of the component. Only nodes that appear in an edge
     are returned (isolated nodes are their own trivial component)."""
@@ -40,7 +40,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
+    while True:
         neighbor_min = (
             und.join(labels, und["dst"] == labels["node"])
             .select(F.col("src").alias("node"), "component")
@@ -62,14 +62,11 @@ def connected_components(
         )
         labels = new_labels
         if changed == 0:
-            break
-    return labels
+            return labels
 
 
 def canonical_mapping(
-    edges: DataFrame,
-    max_iterations: int = 12,
-    assume_large: bool = False,
+    edges: DataFrame, assume_large: bool = False
 ) -> DataFrame:
     """``(src, dst)`` alias edges → ``(node, component)`` rewrite mapping
     where the representative of each component is, in order of preference,
@@ -82,8 +79,7 @@ def canonical_mapping(
     rows are collected and solved with union-find on the driver (a
     distributed iteration on a tiny graph is pure scheduler overhead);
     larger sets run the distributed label-propagation loop. Both paths
-    produce identical mappings when propagation converges within
-    ``max_iterations`` rounds (tests/test_pipeline.py runs the loop with
+    produce identical mappings (tests/test_pipeline.py runs the loop with
     the limit patched to 0 against ``union_find_mapping``).
 
     Action discipline: the small path costs exactly ONE Spark action (a
@@ -101,7 +97,7 @@ def canonical_mapping(
                 out or [], "node string, component string"
             )
     edges = edges.localCheckpoint(eager=True)
-    comp = connected_components(edges, max_iterations)
+    comp = connected_components(edges)
     targets = edges.select(F.col("dst").alias("node")).distinct()
     canon_reps = (
         comp.join(targets, on="node", how="left_semi")

@@ -12,20 +12,21 @@ pruning and join planning for free:
 * checked batch add  → pre-flight semi-join gate, then a single append
                        (one commit ⇒ the reference's rollback-on-conflict
                        post-state for free)
-* unchecked add      → ``left_anti`` pre-filter then append (set semantics
-                       without a full-store ``dropDuplicates``)
-* delete             → ``left_anti`` rewrite
+* unchecked add      → batch ▷ (store ⋉ batch): only fresh rows append
+                       (set semantics without a full-store dedup)
+* delete             → store ⋉ request: the rows to remove
 * size               → ``count``
 
 Set semantics invariant: the quad table never contains two identical
 ``(subj, pred, obj, graph)`` rows (memory_store.go:125-134, 160-167).
 
-Backends supply storage by implementing ``_df``/``_commit``:
-``MemoryQuadStore`` (checkpointed in-memory DataFrame — the analogue of the
-reference's in-memory store) and ``ParquetQuadStore`` (snapshot directories
-with an atomically-swapped commit pointer — the sandbox stand-in for an
-Iceberg table with MERGE; at cluster scale the same algebra commits through
-Iceberg row-level operations instead).
+Backends supply storage by implementing ``_df`` and ``_commit``, which
+takes a delta (the rows added, the rows removed): ``MemoryQuadStore``
+(checkpointed in-memory DataFrame — the analogue of the reference's
+in-memory store) and ``ParquetQuadStore`` (snapshot directories with an
+atomically-swapped commit pointer — the sandbox stand-in for an Iceberg
+table; at cluster scale the same deltas commit through Iceberg row-level
+operations instead).
 """
 
 from __future__ import annotations
@@ -82,24 +83,22 @@ class QuadStoreBase:
         raise NotImplementedError
 
     def _commit(
-        self, df: DataFrame, op: str = "mutate", touched: DataFrame | None = None
+        self,
+        op: str,
+        added: DataFrame | None = None,
+        removed: DataFrame | None = None,
     ) -> None:
-        """Replace the quad table contents with ``df`` (one atomic commit).
-
-        ``touched`` is an optional hint: a DataFrame of quad rows whose
-        (graph, subject) keys cover every row the mutation added or
-        removed. Backends with partitioned storage (ParquetQuadStore)
-        use it to commit only the affected partitions — the Iceberg
-        MERGE-granularity behavior; backends without it ignore it."""
+        """One atomic commit of a delta: the next table is the current one
+        minus ``removed`` plus ``added`` (frames of the ``QUAD_COLS``).
+        ``removed`` holds rows of the table and ``added`` rows absent from
+        it once ``removed`` is gone, which keeps set semantics. Both are
+        lazy plans a backend may evaluate more than once. ParquetQuadStore
+        rewrites only the partitions that lose a row."""
         raise NotImplementedError
 
     def _drop_backend(self) -> None:
         """Backend hook for Drop(); default removes this graph's rows."""
-        self._commit(
-            self._df().where(F.col("graph") != self._uri),
-            op="drop",
-            touched=self.df(),
-        )
+        self._commit("drop", removed=self.df())
 
     # -- helpers ----------------------------------------------------------
 
@@ -144,13 +143,8 @@ class QuadStoreBase:
     # -- write path (graph_store.go #4,6-13) ------------------------------
 
     def delete_all_matches(self, subj: str = "", pred: str = "", obj: str = "") -> None:
-        """Anti-filter rewrite; no-op when nothing matches."""
-        keep = ~((F.col("graph") == self._uri) & pattern_filter(subj, pred, obj))
-        self._commit(
-            self._df().where(keep),
-            op="delete_matches",
-            touched=self.match_df(subj, pred, obj),
-        )
+        """Remove the matching rows; no-op when nothing matches."""
+        self._commit("delete_matches", removed=self.match_df(subj, pred, obj))
 
     def add_triple(self, triple: Triple) -> None:
         """Checked insert (memory_store.go:125-134)."""
@@ -171,41 +165,41 @@ class QuadStoreBase:
                 raise TripleAlreadyExistsError()
             seen.add(key)
         new_df = self._triples_df(triples)
-        clash = new_df.join(self.df(), on=QUAD_COLS, how="left_semi")
+        clash = self.df().join(new_df, on=QUAD_COLS, how="left_semi")
         if clash.limit(1).count() > 0:
             raise TripleAlreadyExistsError()
-        self._commit(self._df().unionByName(new_df), op="add", touched=new_df)
+        self._commit("add", added=new_df)
 
     def add_triple_unchecked(self, triple: Triple) -> None:
         self.add_triples_unchecked([triple])
 
     def add_triples_unchecked(self, triples: list[Triple]) -> None:
         """Idempotent bulk insert — the pipeline's main write path
-        (UpsertResource → AddTriplesUnchecked, ontology_graph.go:275).
-        ``left_anti`` against the store keeps set semantics with one
-        shuffle over the (small) new batch instead of a full-store dedup."""
-        if not triples:
-            return
-        new_df = self._triples_df(triples).dropDuplicates(QUAD_COLS)
-        fresh = new_df.join(self.df(), on=QUAD_COLS, how="left_anti")
-        self._commit(self._df().unionByName(fresh), op="add", touched=new_df)
+        (UpsertResource → AddTriplesUnchecked, ontology_graph.go:275)."""
+        if triples:
+            self._merge(self._triples_df(triples), "add")
 
     def merge_df(self, quads: DataFrame) -> None:
         """Distributed idempotent MERGE of a quad DataFrame (same columns).
         This is the scale path: callers hand an arbitrarily large triple
-        batch; dedup + anti-join + single append = one commit."""
-        new_df = quads.select(*QUAD_COLS).dropDuplicates(QUAD_COLS)
-        fresh = new_df.join(self._df(), on=QUAD_COLS, how="left_anti")
-        self._commit(self._df().unionByName(fresh), op="merge", touched=new_df)
+        batch; it commits as one append of the batch's fresh rows."""
+        self._merge(quads, "merge")
+
+    def _merge(self, quads: DataFrame, op: str) -> None:
+        """Commit the rows of ``quads`` not yet in the table: present =
+        store ⋉ batch (the batch is the build side and no broadcast is
+        forced, so the store is only streamed), fresh = batch ▷ present.
+        A replayed batch adds nothing."""
+        batch = quads.select(*QUAD_COLS).dropDuplicates(QUAD_COLS)
+        present = self._df().join(batch, on=QUAD_COLS, how="left_semi")
+        self._commit(op, added=batch.join(present, on=QUAD_COLS, how="left_anti"))
 
     def delete_df(self, quads: DataFrame) -> None:
         """Distributed unchecked delete of a quad DataFrame (same
         columns) — the DataFrame twin of ``delete_triples_unchecked``
         and the scale path for template updates (DELETE … WHERE …):
-        one anti-join + single commit; rows not present are ignored."""
-        gone = quads.select(*QUAD_COLS).dropDuplicates(QUAD_COLS)
-        kept = self._df().join(gone, on=QUAD_COLS, how="left_anti")
-        self._commit(kept, op="delete", touched=gone)
+        one semi-join + single commit; rows not present are ignored."""
+        self._delete_rows(quads.select(*QUAD_COLS))
 
     def delete_triple(self, triple: Triple) -> None:
         """Checked delete (memory_store.go:181-190)."""
@@ -239,11 +233,8 @@ class QuadStoreBase:
         self._delete_rows(self._triples_df(triples))
 
     def _delete_rows(self, req_df: DataFrame) -> None:
-        self._commit(
-            self._df().join(req_df, on=QUAD_COLS, how="left_anti"),
-            op="delete",
-            touched=req_df,
-        )
+        gone = self._df().join(req_df, on=QUAD_COLS, how="left_semi")
+        self._commit("delete", removed=gone)
 
     def upsert_subjects(
         self, subjects: DataFrame, quads: DataFrame, broadcast: bool = True
@@ -254,44 +245,40 @@ class QuadStoreBase:
         appears as subject *or* as object (referential cleanup), then
         insert ``quads`` — all in ONE commit.
 
-        Two equi anti-joins (subj, then obj) keep the plan hash-joinable
-        and broadcastable — an OR-condition anti-join would degrade to a
-        nested-loop join at scale.
+        The removed rows come from one scan: an ``explode(array(subj,
+        obj))`` semi-join on the subjects, a hash join where an
+        OR-condition join would degrade to a nested loop. Batch rows
+        already present that survive the removal (two equi anti-joins,
+        subj then obj) are not re-added.
 
-        Input contract: callers materialize both inputs first (a store
-        snapshot, a written parquet table, a persisted or checkpointed
-        DataFrame). ``subjects`` feeds two anti-joins and the two
-        semi-joins of the touched hint, ``quads`` the insert and the
-        hint; the hint is collected in one job and the commit written in
-        another, and nothing here caches. A lazy plan such as
-        ``construct_kg``'s output is therefore recomputed for each use:
-        upserting 20 changed files that way took 27.7 s, against 7.8 s
-        for a ``merge_df`` of 20 new files on the same store.
-        """
-        s = subjects.select("subj").distinct()
+        Both inputs feed several joins and the delta may be evaluated more
+        than once (ParquetQuadStore collects the partitions that lose rows
+        in one job and writes in another), so materialize them first — a
+        written parquet table, a persisted or checkpointed DataFrame — not
+        a lazy plan such as ``construct_kg``'s output, which would be
+        recomputed for each use."""
+        s = subjects.select("subj")  # semi/anti joins ignore duplicate keys
         if broadcast:
             # small affected-subject sets (interactive upserts): broadcast
-            # hash anti-join, no shuffle of the store side. Pipeline-scale
+            # hash joins, no shuffle of the store side. Pipeline-scale
             # merges pass broadcast=False and let AQE pick the strategy.
             s = F.broadcast(s)
-        mine = self.df()
-        others = self._df().where(F.col("graph") != self._uri)
-        keep = mine.join(s, on="subj", how="left_anti")
-        keep = keep.join(
-            s.withColumnRenamed("subj", "obj"), on="obj", how="left_anti"
+        by_obj = s.withColumnRenamed("subj", "obj")
+        removed = (
+            self.df()
+            .withColumn("term", F.explode(F.array("subj", "obj")))
+            .join(s.withColumnRenamed("subj", "term"), on="term", how="left_semi")
+            .drop("term")
         )
-        new = quads.select(*QUAD_COLS).dropDuplicates(QUAD_COLS)
-        # touched hint: rows removed (subject hit or referential obj
-        # cleanup — the latter live in the partition of THEIR subject)
-        # plus the inserted batch
-        removed = mine.join(s, on="subj", how="left_semi").unionByName(
-            mine.join(s.withColumnRenamed("subj", "obj"), on="obj", how="left_semi")
+        new = quads.select(*QUAD_COLS)
+        kept = (
+            self._df()
+            .join(new, on=QUAD_COLS, how="left_semi")
+            .join(s, on="subj", how="left_anti")
+            .join(by_obj, on="obj", how="left_anti")
         )
-        self._commit(
-            others.unionByName(keep.select(*QUAD_COLS)).unionByName(new),
-            op="upsert",
-            touched=removed.select(*QUAD_COLS).unionByName(new),
-        )
+        added = new.dropDuplicates(QUAD_COLS).join(kept, QUAD_COLS, "left_anti")
+        self._commit("upsert", added=added, removed=removed)
 
     def graphs(self) -> list[str]:
         """Distinct graph URIs in the backing quad table — the quad-table

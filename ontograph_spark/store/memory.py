@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ontograph_spark.store.base import QUAD_SCHEMA, QuadStoreBase
+from ontograph_spark.store.base import QUAD_COLS, QUAD_SCHEMA, QuadStoreBase
 
 
 class MemoryQuadStore(QuadStoreBase):
@@ -23,7 +23,7 @@ class MemoryQuadStore(QuadStoreBase):
     @classmethod
     def from_df(cls, spark: SparkSession, uri: str, quads: DataFrame) -> MemoryQuadStore:
         store = cls(spark, uri)
-        store._commit(quads.select(*QUAD_SCHEMA.fieldNames()))
+        store._commit("load", added=quads.select(*QUAD_COLS))
         return store
 
     @classmethod
@@ -40,9 +40,8 @@ class MemoryQuadStore(QuadStoreBase):
         store = cls(spark, base)
         rows = [(s, p, o, base) for s, p, o in triples]
         store._commit(
-            spark.createDataFrame(rows, QUAD_SCHEMA).dropDuplicates(
-                QUAD_SCHEMA.fieldNames()
-            )
+            "load",
+            added=spark.createDataFrame(rows, QUAD_SCHEMA).dropDuplicates(QUAD_COLS),
         )
         return store
 
@@ -52,10 +51,16 @@ class MemoryQuadStore(QuadStoreBase):
         return self._quads
 
     def _commit(
-        self, df: DataFrame, op: str = "mutate", touched: DataFrame | None = None
+        self,
+        op: str,
+        added: DataFrame | None = None,
+        removed: DataFrame | None = None,
     ) -> None:
-        # in-memory state has no partition granularity — ``touched`` is
-        # the partitioned backends' hint and is ignored here
+        df = self._df()
+        if removed is not None:
+            df = df.join(removed, on=QUAD_COLS, how="left_anti")
+        if added is not None:
+            df = df.unionByName(added)
         self._quads = df.localCheckpoint(eager=True)
 
     def _drop_backend(self) -> None:

@@ -1,5 +1,5 @@
-"""Parquet-backed quad store with a snapshot commit log and
-partition-scoped commits.
+"""Parquet-backed quad store with a snapshot commit log and delta
+commits.
 
 The persistent backend for graphs bigger than memory. In a production
 deployment the quad table is an Iceberg table and every mutation is a
@@ -11,26 +11,36 @@ root/
   _meta.json                  {"uri": ..., "version": 1}
   CURRENT                     text: name of the live snapshot, e.g. "v00000003"
   snapshots/v00000003/        parquet dir, Hive-partitioned graph=<g>/salt=<b>
-  snapshots/v00000003.json    commit manifest: op, rows, parent, scoped parts
+  snapshots/v00000003.json    commit manifest: op, rows, parent, rewritten parts
 ```
 
-* Readers resolve ``CURRENT`` then scan one snapshot directory — filters
-  and column pruning push into the parquet scan, and the ``graph=``
-  partition column gives graph-scoped operators partition pruning for
-  free.
-* Writers materialize the next state into a new snapshot dir, then commit
-  by atomically replacing ``CURRENT`` (write-temp + ``os.replace``).
-  A crashed writer leaves an orphan directory, never a corrupt table —
-  the same observable guarantee as an Iceberg commit.
-* **Partition-scoped commits** (the Iceberg MERGE-granularity behavior):
-  every mutation passes a ``touched`` hint (the added/removed rows).
-  When the touched (graph, salt) partition set is small, the new
-  snapshot HARD-LINKS every untouched partition's files from the parent
-  (no rewrite, no extra storage — link count is the only change) and
-  rewrites only the affected partitions. A single checked ``add_triple``
-  therefore rewrites one salt bucket, not the table. Wide batches
-  (> ``scope_limit`` partitions, or a first commit) fall back to a full
-  rewrite, which is then the cheaper plan anyway. Snapshot expiry is
+* Readers resolve ``CURRENT`` then scan one snapshot directory with the
+  fixed file schema ``(subj, pred, obj, graph, salt int)``: no inference
+  job, and an all-deleted snapshot reads as the empty table. Filters and
+  column pruning push into the scan; ``graph``/``salt`` are partition
+  columns, so graph-scoped operators get partition pruning for free.
+* **Delta commits** (Iceberg's copy-on-write row-level operations at
+  ``(graph, salt)`` partition granularity): a mutation hands the backend
+  the rows it adds and the rows it removes (``QuadStoreBase._commit``).
+  The next snapshot
+  1. HARD-LINKS every parent file of each partition that loses no row
+     (no rewrite, no storage growth — the link count is the only change);
+  2. rewrites each partition that loses a row (found by one distinct over
+     the removed rows) as its parent rows minus the removed ones;
+  3. appends the added rows as one new file per ``graph=/salt=`` dir.
+  A merge writes only its fresh quads; a replayed batch writes no file.
+  Every data file holds live rows only (no tombstones), so any parquet
+  reader sees the table as it is.
+* **Fold bound:** a commit that would leave more than ``FOLD_FILES`` data
+  files in a partition folds that partition into one file, so repeated
+  small appends keep the file count per partition bounded.
+* The manifest's ``rows`` sums the data files' parquet footers, read on
+  the driver — no Spark job.
+* Writers build the next snapshot in a directory that holds nothing else
+  (an orphan left at that name by a crashed writer is removed first), then
+  commit by atomically replacing ``CURRENT`` (write-temp + ``os.replace``).
+  A crashed writer leaves an orphan directory, never a corrupt table — the
+  same observable guarantee as an Iceberg commit. Snapshot expiry is
   link-safe: unlinking an old snapshot's files never affects a newer one
   that still references the same inodes.
 * Data is laid out by **graph + salted subject** so one hot subject
@@ -51,14 +61,20 @@ import time
 from functools import reduce
 from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ontograph_spark.store.base import QUAD_SCHEMA, QuadStoreBase
+from ontograph_spark.store.base import QUAD_COLS, QUAD_SCHEMA, QuadStoreBase
 
 CURRENT_FILE = "CURRENT"
 SNAPSHOT_DIR = "snapshots"
+#: a commit that would leave more data files than this in one (graph,
+#: salt) partition folds the partition into one file
+FOLD_FILES = 8
+#: the data files' schema: the quad columns plus the salt partition column
+FILE_SCHEMA = StructType(QUAD_SCHEMA.fields + [StructField("salt", IntegerType())])
 
 
 def _atomic_write(path: str, content: str) -> None:
@@ -75,6 +91,16 @@ def _link_or_copy(src: str, dst: str) -> None:
         shutil.copy2(src, dst)
 
 
+def _data_files(path: str) -> list[str]:
+    """The parquet data files under a snapshot or partition dir."""
+    return [
+        os.path.join(dp, f)
+        for dp, _dn, fns in os.walk(path)
+        for f in fns
+        if f.endswith(".parquet")
+    ]
+
+
 class ParquetQuadStore(QuadStoreBase):
     """One named graph over a snapshot-versioned parquet quad table."""
 
@@ -85,14 +111,11 @@ class ParquetQuadStore(QuadStoreBase):
         root: str,
         write_partitions: int | None = None,
         salt_buckets: int = 16,
-        scope_limit: int = 64,
     ) -> None:
         super().__init__(spark, uri)
         self.root = root
         self.write_partitions = write_partitions
         self.salt_buckets = salt_buckets
-        #: commits touching more partitions than this rewrite fully
-        self.scope_limit = scope_limit
         os.makedirs(os.path.join(root, SNAPSHOT_DIR), exist_ok=True)
         meta_path = os.path.join(root, "_meta.json")
         if not os.path.exists(meta_path):
@@ -120,17 +143,13 @@ class ParquetQuadStore(QuadStoreBase):
             "int"
         )
 
+    def _scan(self, path: str) -> DataFrame:
+        """One snapshot dir with its partition columns, read with the fixed
+        file schema (no inference job)."""
+        return self.spark.read.schema(FILE_SCHEMA).parquet(path)
+
     def _read_snapshot(self, path: str) -> DataFrame:
-        """Read one snapshot dir. ``graph``/``salt`` are Hive partition
-        columns; an all-deleted snapshot has no partition dirs at all and
-        reads as the empty table."""
-        try:
-            df = self.spark.read.parquet(path)
-        except AnalysisException:
-            return self.spark.createDataFrame([], QUAD_SCHEMA)
-        return df.select(
-            "subj", "pred", "obj", F.col("graph").cast("string").alias("graph")
-        )
+        return self._scan(path).select(*QUAD_COLS)
 
     def _df(self) -> DataFrame:
         cur = self.current_snapshot()
@@ -138,11 +157,10 @@ class ParquetQuadStore(QuadStoreBase):
             return self.spark.createDataFrame([], QUAD_SCHEMA)
         return self._read_snapshot(self._snapshot_path(cur))
 
-    def _list_partitions(self, snapshot: str) -> dict[tuple[str, int], str]:
-        """(graph, salt) → partition dir path for one snapshot (decoded
-        from the Hive-escaped directory names Spark writes)."""
+    def _list_partitions(self, base: str) -> dict[tuple[str, int], str]:
+        """(graph, salt) → partition dir path under one snapshot dir
+        (decoded from the Hive-escaped directory names Spark writes)."""
         out: dict[tuple[str, int], str] = {}
-        base = self._snapshot_path(snapshot)
         for gdir in os.listdir(base):
             if not gdir.startswith("graph="):
                 continue
@@ -155,63 +173,47 @@ class ParquetQuadStore(QuadStoreBase):
                     )
         return out
 
-    def _touched_partitions(
-        self, touched: DataFrame
-    ) -> set[tuple[str, int]] | None:
-        """The (graph, salt) partitions a mutation affects, or None when
-        the set exceeds ``scope_limit`` (full rewrite is cheaper). One
-        small distinct over the mutation batch — never the table."""
-        rows = (
-            touched.select(F.col("graph"), self._salt_col().alias("salt"))
-            .distinct()
-            .limit(self.scope_limit + 1)
-            .collect()
-        )
-        if len(rows) > self.scope_limit:
-            return None
-        return {(r["graph"], r["salt"]) for r in rows}
-
     def _commit(
-        self, df: DataFrame, op: str = "mutate", touched: DataFrame | None = None
+        self,
+        op: str,
+        added: DataFrame | None = None,
+        removed: DataFrame | None = None,
     ) -> None:
-        """Materialize the next table state and swap the pointer. With a
-        ``touched`` hint and a live parent snapshot, only the affected
-        (graph, salt) partitions are rewritten; every other partition's
-        files are hard-linked from the parent unchanged."""
+        """One delta commit (see the module docstring): link the parent
+        partitions that lose no row, rewrite those that do, append
+        ``added``, fold any partition past ``FOLD_FILES``, then swap the
+        pointer."""
         parent = self.current_snapshot()
         name = self._next_snapshot_name()
         path = self._snapshot_path(name)
-        out = df.select(*QUAD_SCHEMA.fieldNames()).withColumn(
-            "salt", self._salt_col()
-        )
-        scoped: list[list] | None = None
-        if touched is not None and parent is not None:
-            parts = self._touched_partitions(touched)
-            if parts is not None:
-                untouched = {
-                    k: v
-                    for k, v in self._list_partitions(parent).items()
-                    if k not in parts
-                }
-                if untouched:
-                    self._commit_scoped(out, path, parts, untouched)
-                    scoped = sorted([g, s] for g, s in parts)
-        if scoped is None:
-            # Salted repartition by (graph, subject-salt): co-locates a
-            # subject's triples for downstream per-subject folds while
-            # bounding the damage of a hot subject; rdf:type-heavy batches
-            # can't skew a single output file. One file per partition dir
-            # (each (graph, salt) group lands whole in one task).
-            n = self.write_partitions or max(
-                2, self.spark.sparkContext.defaultParallelism
+        shutil.rmtree(path, ignore_errors=True)  # a crashed writer's orphan
+        os.makedirs(path)
+        base = self._snapshot_path(parent) if parent else None
+        parts = self._list_partitions(base) if base else {}
+        lost: set[tuple[str, int]] = set()
+        if removed is not None and parts:
+            salted = removed.select("graph", self._salt_col().alias("salt"))
+            lost = parts.keys() & set(map(tuple, salted.distinct().collect()))
+        for key, src in parts.items():
+            if key not in lost:
+                dst = os.path.join(path, os.path.relpath(src, base))
+                os.makedirs(dst)
+                for fname in os.listdir(src):
+                    _link_or_copy(os.path.join(src, fname), os.path.join(dst, fname))
+        frames = []
+        if lost:
+            in_lost = reduce(
+                lambda a, b: a | b,
+                [(F.col("graph") == g) & (F.col("salt") == s) for g, s in lost],
             )
-            (
-                out.repartition(n, F.col("graph"), F.col("salt"))
-                .write.partitionBy("graph", "salt")
-                .mode("overwrite")
-                .parquet(path)
-            )
-        count = self._read_snapshot(path).count()
+            kept = self._scan(base).where(in_lost)
+            frames.append(kept.join(removed, QUAD_COLS, "left_anti"))
+        if added is not None:
+            frames.append(added.withColumn("salt", self._salt_col()))
+        if frames:
+            self._write(reduce(DataFrame.unionByName, frames), path)
+        rewritten = lost | self._fold(path)
+        rows = sum(pq.read_metadata(f).num_rows for f in _data_files(path))
         _atomic_write(
             f"{path}.json",
             json.dumps(
@@ -219,67 +221,55 @@ class ParquetQuadStore(QuadStoreBase):
                     "snapshot": name,
                     "parent": parent,
                     "op": op,
-                    "rows": count,
-                    "scoped_partitions": scoped,
+                    "rows": rows,
+                    "scoped_partitions": sorted([g, s] for g, s in rewritten),
                     "committed_at": time.time(),
                 }
             ),
         )
         _atomic_write(os.path.join(self.root, CURRENT_FILE), name)
 
-    def _commit_scoped(
-        self,
-        out: DataFrame,
-        path: str,
-        parts: set[tuple[str, int]],
-        untouched: dict[tuple[str, int], str],
-    ) -> None:
-        """Hard-link every untouched partition from the parent snapshot,
-        then write only the touched partitions' next state. The filter's
-        ``graph`` conjunct prunes the parent scan to the touched graphs
-        (graph is a partition column); the rewrite shuffles only the
-        touched rows."""
-        os.makedirs(path, exist_ok=True)
-        base = self._snapshot_path(self.current_snapshot())
-        for (_g, _s), src in untouched.items():
-            dst = os.path.join(path, os.path.relpath(src, base))
-            os.makedirs(dst, exist_ok=True)
-            for fname in os.listdir(src):
-                _link_or_copy(os.path.join(src, fname), os.path.join(dst, fname))
-        if not parts:  # no-op mutation (nothing matched): pure-link snapshot
-            return
-        cond = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("graph") == F.lit(g)) & (F.col("salt") == F.lit(s))
-                for g, s in sorted(parts)
-            ],
-        )
+    def _write(self, df: DataFrame, path: str) -> None:
+        """Append quad rows (with ``salt``) under ``path`` as one file per
+        (graph, salt) partition: the salted repartition lands each group
+        whole in one task, co-locating a subject's triples for downstream
+        per-subject folds while a hot subject cannot skew one file."""
+        n = self.write_partitions or max(2, self.spark.sparkContext.defaultParallelism)
         (
-            out.where(cond)
-            .repartition(max(1, min(len(parts), 8)), F.col("graph"), F.col("salt"))
+            df.repartition(n, F.col("graph"), F.col("salt"))
             .write.partitionBy("graph", "salt")
             .mode("append")
             .parquet(path)
         )
 
-    # _drop_backend: inherited — the base implementation already passes
-    # this graph's rows as the touched hint, so every OTHER graph's
-    # partitions are hard-linked, not rewritten, by the scoped commit.
+    def _fold(self, path: str) -> set[tuple[str, int]]:
+        """Fold every partition under ``path`` holding more than
+        ``FOLD_FILES`` data files into one file; returns the folded keys."""
+        over = {
+            key: d
+            for key, d in self._list_partitions(path).items()
+            if len(_data_files(d)) > FOLD_FILES
+        }
+        if over:
+            tmp = os.path.join(path, "_fold")  # hidden from snapshot scans
+            scan = self.spark.read.schema(FILE_SCHEMA).option("basePath", path)
+            self._write(scan.parquet(*over.values()), tmp)
+            for d in over.values():
+                shutil.rmtree(d)
+                os.rename(os.path.join(tmp, os.path.relpath(d, path)), d)
+            shutil.rmtree(tmp)
+        return set(over)
 
     # -- maintenance ------------------------------------------------------
 
     def expire_snapshots(self, keep: int = 2) -> list[str]:
         """Delete all but the most recent ``keep`` snapshots; returns the
-        expired names. Never touches the live snapshot. Safe with scoped
+        expired names. Never touches the live snapshot. Safe with delta
         commits: deleting an old snapshot only unlinks its directory
         entries — files hard-linked into newer snapshots persist."""
         cur = self.current_snapshot()
         snap_root = os.path.join(self.root, SNAPSHOT_DIR)
-        names = sorted(
-            n for n in os.listdir(snap_root)
-            if n.startswith("v") and os.path.isdir(os.path.join(snap_root, n))
-        )
+        names = self.snapshots()
         expired = [n for n in names[:-keep] if n != cur] if keep else []
         for n in expired:
             shutil.rmtree(os.path.join(snap_root, n), ignore_errors=True)
@@ -289,11 +279,13 @@ class ParquetQuadStore(QuadStoreBase):
         return expired
 
     def history(self) -> list[dict]:
-        """Commit manifests, oldest first."""
+        """Commit manifests, oldest first. A manifest newer than
+        ``CURRENT`` belongs to a crashed writer's orphan and is skipped."""
+        cur = self.current_snapshot() or ""
         snap_root = os.path.join(self.root, SNAPSHOT_DIR)
         out = []
         for n in sorted(os.listdir(snap_root)):
-            if n.endswith(".json"):
+            if n.endswith(".json") and n[: -len(".json")] <= cur:
                 with open(os.path.join(snap_root, n)) as f:
                     out.append(json.load(f))
         return out
@@ -301,14 +293,16 @@ class ParquetQuadStore(QuadStoreBase):
     def snapshots(self) -> list[str]:
         """Retained snapshot names, oldest first (directories still on
         disk; :meth:`expire_snapshots` garbage-collects a snapshot's
-        data and manifest together)."""
+        data and manifest together). An orphan newer than ``CURRENT``
+        is not a snapshot."""
+        cur = self.current_snapshot() or ""
         snap_root = os.path.join(self.root, SNAPSHOT_DIR)
-        if not os.path.isdir(snap_root):
-            return []
         return sorted(
             n
             for n in os.listdir(snap_root)
-            if n.startswith("v") and os.path.isdir(os.path.join(snap_root, n))
+            if n.startswith("v")
+            and n <= cur
+            and os.path.isdir(os.path.join(snap_root, n))
         )
 
     def df_at(self, snapshot: str) -> DataFrame:
@@ -318,7 +312,7 @@ class ParquetQuadStore(QuadStoreBase):
         :meth:`df`; raises ``ValueError`` for an unknown or expired
         snapshot (run within the expiry window, like any time travel)."""
         path = self._snapshot_path(snapshot)
-        if not os.path.isdir(path):
+        if snapshot not in self.snapshots():
             raise ValueError(
                 f"unknown or expired snapshot {snapshot!r}; retained: "
                 f"{self.snapshots()}"

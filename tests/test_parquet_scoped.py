@@ -1,20 +1,22 @@
-"""Partition-scoped ParquetQuadStore commits.
+"""Delta commits of ParquetQuadStore.
 
-A mutation must rewrite only the (graph, salt) partitions it touches: the
-new snapshot HARD-LINKS every other partition's files from the parent —
-byte-identical by inode, no rewrite, no storage growth. This is the
-snapshot-protocol analogue of Iceberg's MERGE granularity (the production
-backend this store stands in for)."""
+A mutation rewrites only the (graph, salt) partitions that lose a row and
+appends its fresh rows as new files: the new snapshot HARD-LINKS every
+other parent file — byte-identical by inode, no rewrite, no storage
+growth. This is the snapshot-protocol analogue of Iceberg's copy-on-write
+row-level operations (the production backend this store stands in for)."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from ontograph_spark.ontology.resources import new_triple
 from ontograph_spark.store import ParquetQuadStore
+from ontograph_spark.store import parquet_store
 from ontograph_spark.terms import mk_resource
 
 URI = "urn:scoped"
@@ -66,27 +68,28 @@ def test_single_add_links_untouched_partitions(store):
 
     changed = [p for p in after if after[p] != before.get(p)]
     unchanged = [p for p in after if after[p] == before.get(p)]
-    # exactly one salt bucket rewritten; every other partition's files are
-    # the SAME inodes (hard links), not copies
+    # exactly one salt bucket gains a file; every parent file, there and
+    # everywhere else, is the SAME inode (hard link), not a copy
     assert len(changed) == 1
-    assert unchanged and all(
-        after[p] == before[p] for p in unchanged
-    )
+    assert unchanged
+    for p, files in before.items():
+        assert files.items() <= after[p].items()
     assert store.size() == 41
-    # the manifest records the scoped partition set
+    # an add loses no row, so the manifest lists no rewritten partition
     manifest = store.history()[-1]
     assert manifest["op"] == "add"
-    assert manifest["scoped_partitions"] is not None
-    assert len(manifest["scoped_partitions"]) == 1
+    assert manifest["scoped_partitions"] == []
 
 
 def test_single_delete_is_scoped(store):
+    lost = _partition_of(store, _t(7).subject)
     v1 = store.current_snapshot()
     before = _files_by_partition(store.root, v1)
     store.delete_triple(_t(7))
     after = _files_by_partition(store.root, store.current_snapshot())
-    changed = [p for p in after if after[p] != before.get(p)]
-    assert len(changed) <= 1
+    # only the partition that lost the row is rewritten
+    assert [p for p in before if after.get(p) != before[p]] == [lost]
+    assert len(store.history()[-1]["scoped_partitions"]) == 1
     assert store.size() == 39
     assert store.get_all_matches(f"<{URI}#s7>") == []
 
@@ -125,18 +128,186 @@ def test_expire_is_link_safe(store):
     assert store.size() == 42
 
 
-def test_merge_df_wide_batch_full_rewrite(spark, store):
-    """A batch touching more partitions than scope_limit falls back to a
-    full rewrite (and stays correct)."""
-    store.scope_limit = 2
-    quads = spark.createDataFrame(
-        [(f"<{URI}#m{i}>", f"<{URI}#p>", f"<{URI}#o{i}>", URI) for i in range(30)],
+def _inodes(root: str, snapshot: str) -> dict[int, str]:
+    """inode → path of every parquet data file of one snapshot."""
+    base = os.path.join(root, "snapshots", snapshot)
+    return {
+        os.stat(os.path.join(dp, f)).st_ino: os.path.join(dp, f)
+        for dp, _dn, fns in os.walk(base)
+        for f in fns
+        if f.endswith(".parquet")
+    }
+
+
+def _fresh_file_rows(root: str, parent: str, child: str) -> set[tuple]:
+    """(subj, pred, obj) rows of the child's data files that are not
+    linked from the parent."""
+    old = _inodes(root, parent)
+    rows: set[tuple] = set()
+    for ino, path in _inodes(root, child).items():
+        if ino not in old:
+            t = pq.read_table(path, columns=["subj", "pred", "obj"])
+            rows |= set(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+    return rows
+
+
+def _quads(spark, rows):
+    return spark.createDataFrame(
+        [(s, p, o, URI) for s, p, o in rows],
         "subj string, pred string, obj string, graph string",
     )
-    store.merge_df(quads)
+
+
+def _partition_of(store, subj: str) -> str:
+    """The partition dir (relative) holding ``subj``'s rows."""
+    base = store._snapshot_path(store.current_snapshot())
+    for ino_path in _inodes(store.root, store.current_snapshot()).values():
+        if subj in pq.read_table(ino_path, columns=["subj"]).column(0).to_pylist():
+            return os.path.relpath(os.path.dirname(ino_path), base)
+    raise AssertionError(f"{subj} not stored")
+
+
+def test_merge_df_wide_batch_links_every_parent_file(spark, store):
+    """A merge touching every salt bucket still links every parent file
+    and writes only files holding its fresh rows: stored quads and the
+    batch's own repeats are not written again."""
+    v1 = store.current_snapshot()
+    rows = [(f"<{URI}#m{i}>", f"<{URI}#p>", f"<{URI}#o{i}>") for i in range(30)]
+    stored = [(t.subject, t.predicate, t.object) for t in map(_t, range(0, 40, 4))]
+    store.merge_df(_quads(spark, rows + stored + rows[:5]))
+    v2 = store.current_snapshot()
     assert store.size() == 70
+    assert _inodes(store.root, v1).keys() <= _inodes(store.root, v2).keys()
+    assert _fresh_file_rows(store.root, v1, v2) == set(rows)
+    assert store.history()[-1]["scoped_partitions"] == []
+
+
+def test_replayed_merge_writes_no_file(spark, store):
+    rows = [(f"<{URI}#r{i}>", f"<{URI}#p>", f"<{URI}#o{i}>") for i in range(12)]
+    store.merge_df(_quads(spark, rows))
+    v2 = store.current_snapshot()
+    store.merge_df(_quads(spark, rows))
+    v3 = store.current_snapshot()
+    assert v3 != v2
+    assert _inodes(store.root, v3).keys() == _inodes(store.root, v2).keys()
+    assert store.history()[-1]["rows"] == 52 == store.size()
+
+
+def test_upsert_rewrites_only_partitions_losing_rows(spark, store):
+    """Upserting one subject rewrites its partition and the partition of
+    every row that refers to it as object — here another subject's — and
+    links every other partition's files."""
+    target = f"<{URI}#s7>"
+    # a referential row from a subject in a different salt bucket
+    ref_subj = next(
+        t.subject
+        for t in map(_t, range(40))
+        if _partition_of(store, t.subject) != _partition_of(store, target)
+    )
+    store.add_triple(new_triple(ref_subj, f"<{URI}#ref>", target))
+    lost = {_partition_of(store, target), _partition_of(store, ref_subj)}
+    v1 = store.current_snapshot()
+    before = _files_by_partition(store.root, v1)
+
+    new = (target, f"<{URI}#p>", f"<{URI}#new>")
+    store.upsert_subjects(
+        spark.createDataFrame([(target,)], "subj string"), _quads(spark, [new])
+    )
+    after = _files_by_partition(store.root, store.current_snapshot())
+    rewritten = {p for p in before if not before[p].items() <= after[p].items()}
+    assert rewritten == lost
+    assert all(after[p] == before[p] for p in before if p not in lost)
     manifest = store.history()[-1]
-    assert manifest["scoped_partitions"] is None
+    assert len(manifest["scoped_partitions"]) == 2
+    assert store.get_all_matches(target) == [new_triple(*new)]
+    assert store.get_all_matches("", "", target) == []
+    assert store.size() == 40
+
+
+def test_repeated_appends_fold_at_the_bound(spark, tmp_path):
+    """Single-row appends to one partition never leave more than
+    FOLD_FILES files in it, and the fold keeps every row."""
+    s = ParquetQuadStore(
+        spark, URI, str(tmp_path / "quads"), write_partitions=1, salt_buckets=1
+    )
+    counts = []
+    for i in range(parquet_store.FOLD_FILES + 2):
+        s.add_triple(_t(i))
+        counts.append(len(_inodes(s.root, s.current_snapshot())))
+    assert max(counts) <= parquet_store.FOLD_FILES
+    assert counts[: parquet_store.FOLD_FILES] == list(
+        range(1, parquet_store.FOLD_FILES + 1)
+    )
+    assert counts[parquet_store.FOLD_FILES] == 1  # folded
+    assert s.history()[parquet_store.FOLD_FILES]["scoped_partitions"] == [[URI, 0]]
+    assert s.size() == parquet_store.FOLD_FILES + 2
+    assert {t.subject for t in s.get_all_triples()} == {
+        _t(i).subject for i in range(parquet_store.FOLD_FILES + 2)
+    }
+
+
+def test_manifest_rows_equal_count(spark, tmp_path):
+    """The manifest's footer-summed ``rows`` equals a scan's count after
+    every kind of commit, down to an all-deleted snapshot."""
+    s = ParquetQuadStore(
+        spark, URI, str(tmp_path / "quads"), write_partitions=2, salt_buckets=4
+    )
+    other = ParquetQuadStore(
+        spark, "urn:other", s.root, write_partitions=2, salt_buckets=4
+    )
+
+    def check():
+        assert s.history()[-1]["rows"] == s._df().count()
+
+    s.add_triples([_t(i) for i in range(10)])  # first commit
+    check()
+    s.add_triple(_t(10))
+    check()
+    s.merge_df(_quads(spark, [(f"<{URI}#m>", f"<{URI}#p>", f"<{URI}#s1>")]))
+    check()
+    s.upsert_subjects(
+        spark.createDataFrame([(f"<{URI}#s1>",)], "subj string"),
+        _quads(spark, [(f"<{URI}#s1>", f"<{URI}#p>", f"<{URI}#x>")]),
+    )
+    check()
+    s.delete_triple(_t(2))
+    check()
+    other.add_triples([_t(i, "urn:other") for i in range(3)])
+    check()
+    other.drop()
+    check()
+    s.delete_all_matches()
+    check()
+    assert s.history()[-1]["rows"] == 0 == s.size()
+    assert s.get_all_triples() == []
+
+
+def test_crashed_commit_leaves_store_usable(store, monkeypatch):
+    """A writer that dies after writing its data but before swapping
+    CURRENT leaves an orphan at the next snapshot name; the next commit
+    must not read or link into it."""
+    v1 = store.current_snapshot()
+    real = parquet_store._atomic_write
+
+    def crash(path, content):
+        if path.endswith(parquet_store.CURRENT_FILE):
+            raise OSError("crash before the pointer swap")
+        real(path, content)
+
+    monkeypatch.setattr(parquet_store, "_atomic_write", crash)
+    with pytest.raises(OSError, match="crash"):
+        store.add_triple(_t(500))
+    monkeypatch.setattr(parquet_store, "_atomic_write", real)
+    assert store.current_snapshot() == v1
+    assert store.size() == 40
+    # the orphan is neither history nor a snapshot to travel to
+    assert store.history()[-1]["snapshot"] == v1
+    assert store.snapshots() == [v1]
+
+    store.add_triple(_t(501))
+    assert store.size() == 41
+    assert store.get_all_matches(_t(500).subject) == []
+    assert store.get_all_matches(_t(501).subject) == [_t(501)]
 
 
 def test_graph_scan_prunes_partitions(spark, store):

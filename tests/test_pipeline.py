@@ -298,3 +298,24 @@ def test_canonical_mapping_distributed_path_matches_union_find(
         want = sorted(union_find_mapping(edges))
         assert ("<u:a0>", "<u:t0>") in want and ("<u:t1>", "<u:t0>") in want
         assert got == want, f"seed {seed}: {edges}"
+
+
+def test_canonical_mapping_distributed_path_runs_to_convergence(
+    spark, monkeypatch
+):
+    """A 21-node alias chain needs 20 label-propagation rounds: the
+    distributed path must run until no label changes, not stop after a
+    fixed round count, and map every non-representative node."""
+    from ontograph_spark.functions import graph_algo
+    from ontograph_spark.pipeline.canon import (
+        canonical_mapping,
+        union_find_mapping,
+    )
+
+    monkeypatch.setattr(graph_algo, "DRIVER_EDGE_LIMIT", 0)
+    edges = [(f"<u:c{i:02d}>", f"<u:c{i + 1:02d}>") for i in range(20)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = sorted(tuple(r) for r in canonical_mapping(df).collect())
+    want = sorted(union_find_mapping(edges))
+    assert len(want) == 20
+    assert got == want

@@ -23,6 +23,7 @@ from ontograph_spark import vocab
 from ontograph_spark.functions import text as T
 from ontograph_spark.functions.similarity import brute_force_topk
 from ontograph_spark.sources.tpch_quads import G, QUADS_SQL_CTE, quads_df
+from ontograph_spark.terms import local_frame
 
 RDF_TYPE = f"<{vocab.RDF_TYPE}>"
 NAMED = f"<{vocab.OWL_NAMED_INDIVIDUAL}>"
@@ -151,13 +152,14 @@ def q_upsert_post(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = f"<{G}#supplier-1>"
     q = quads_df(spark, sf_dir)
     keep = q.where(~((F.col("subj") == t) | (F.col("obj") == t)))
-    new_rows = spark.createDataFrame(
+    new_rows = local_frame(
+        spark,
         [
             (t, RDF_TYPE, NAMED, G),
             (t, RDF_TYPE, f"<{G}#Supplier>", G),
             (t, LABEL, '"supplier-1-v2"', G),
         ],
-        ["subj", "pred", "obj", "graph"],
+        "subj string, pred string, obj string, graph string",
     )
     post = keep.unionByName(new_rows)
     return post.groupBy("pred").agg(F.count(F.lit(1)).alias("n"))
@@ -1856,7 +1858,8 @@ def q_kg_rdfs_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ontograph_spark.ontology.inference import rdfs_inferred
 
     q = quads_df(spark, sf_dir)
-    schema = spark.createDataFrame(
+    schema = local_frame(
+        spark,
         [(s, p, o, G) for s, p, o in _rdfs_schema_triples()],
         "subj string, pred string, obj string, graph string",
     )

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from ontograph_spark.functions import graph_algo
 from ontograph_spark.functions.text import shingles, word_ngrams
+from ontograph_spark.terms import local_frame
 
 
 def exact_duplicate_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -791,8 +792,8 @@ def near_dup_keep(
         # a long-lived session would otherwise accumulate until an
         # external clearCache)
         edges.unpersist()
-        comp = df.sparkSession.createDataFrame(
-            mapping or [], "node long, component long"
+        comp = local_frame(
+            df.sparkSession, mapping, "node long, component long"
         )
     else:
         from ontograph_spark.pipeline.canon import connected_components

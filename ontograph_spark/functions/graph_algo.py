@@ -30,9 +30,10 @@ into one plan (k is small); nothing is collected to the driver.
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ontograph_spark.terms import local_frame
 
 #: damping factor as an exact fraction (85/100) — integer arithmetic only
 DAMP_NUM, DAMP_DEN = 17, 20
@@ -180,13 +181,9 @@ def transitive_closure(edges: DataFrame, seed: str | None = None) -> DataFrame:
     if len(head) <= limit:
         pairs = _driver_closure(head, seed, limit)
         if pairs is not None:
-            table = pa.table(
-                {
-                    c: pa.array([p[i] for p in pairs], pa.string())
-                    for i, c in enumerate(cols)
-                }
+            return local_frame(
+                edges.sparkSession, pairs, ", ".join(f"`{c}` string" for c in cols)
             )
-            return edges.sparkSession.createDataFrame(table)
     edges = edges.localCheckpoint()
     step = edges.withColumnRenamed("src", "__mid")
     known = edges if seed is None else edges.where(F.col("src") == F.lit(seed))

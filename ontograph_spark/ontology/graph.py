@@ -43,7 +43,13 @@ from ontograph_spark.ontology.resources import (
     fold_object_property,
 )
 from ontograph_spark.store.base import QUAD_SCHEMA, QuadStoreBase, pattern_filter
-from ontograph_spark.terms import mk_literal, mk_resource, term_language, term_value
+from ontograph_spark.terms import (
+    local_frame,
+    mk_literal,
+    mk_resource,
+    term_language,
+    term_value,
+)
 
 
 @dataclass
@@ -258,15 +264,15 @@ class OntologyGraph:
             return
         spark = store.spark
         g = self.get_uri()
-        subjects = spark.createDataFrame(
-            [(mk_resource(r.get_uri()),) for r in resources], ["subj"]
+        subjects = local_frame(
+            spark, [(mk_resource(r.get_uri()),) for r in resources], "subj string"
         )
         rows = [
             (t.subject, t.predicate, t.object, g)
             for r in resources
             for t in r.to_triples()
         ]
-        quads = spark.createDataFrame(rows, QUAD_SCHEMA)
+        quads = local_frame(spark, rows, QUAD_SCHEMA)
         store.upsert_subjects(subjects, quads)
 
     def delete_resource(self, uri: str) -> None:
@@ -279,8 +285,8 @@ class OntologyGraph:
             self.store.delete_all_matches(term, "", "")
             self.store.delete_all_matches("", "", term)
             return
-        subjects = store.spark.createDataFrame([(term,)], ["subj"])
-        empty = store.spark.createDataFrame([], QUAD_SCHEMA)
+        subjects = local_frame(store.spark, [(term,)], "subj string")
+        empty = local_frame(store.spark, [], QUAD_SCHEMA)
         store.upsert_subjects(subjects, empty)
 
     # -- resource read path (ontology_graph.go:290-514) -------------------

@@ -65,6 +65,7 @@ from pyspark.sql.functions import broadcast
 from ontograph_spark import vocab
 from ontograph_spark.errors import FixpointNotConvergedError
 from ontograph_spark.functions import graph_algo
+from ontograph_spark.terms import local_frame
 
 _TYPE = f"<{vocab.RDF_TYPE}>"
 _SUB_PROP = f"<{vocab.RDFS_SUB_PROPERTY_OF}>"
@@ -248,7 +249,7 @@ def rdfs_closure(
     # property inheritance (ρdf restriction — keeps strata independent).
     data = t.where(~F.col("pred").isin(_TYPE, *_SCHEMA_PREDS))
 
-    empty_rel = data.sparkSession.createDataFrame([], "p string, q string")
+    empty_rel = local_frame(data.sparkSession, [], "p string, q string")
     if owl_rules:
         inv = t.where(F.col("pred") == _INVERSE).select(
             F.col("subj").alias("p"), F.col("obj").alias("q")
@@ -379,7 +380,7 @@ def rdfs_closure_delta(
     # the materialized closure already contains the transitive sp/sc
     # relations (rdfs_closure emits them) — no re-closing needed
     sp, sc, dom, rng = rel(_SUB_PROP), rel(_SUB_CLASS), rel(_DOMAIN), rel(_RANGE)
-    empty_rel = c.sparkSession.createDataFrame([], "p string, q string")
+    empty_rel = local_frame(c.sparkSession, [], "p string, q string")
     if owl_rules:
         inv = c.where(F.col("pred") == _INVERSE).select(
             F.col("subj").alias("p"), F.col("obj").alias("q")

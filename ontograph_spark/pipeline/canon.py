@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontograph_spark.functions import graph_algo
+from ontograph_spark.terms import local_frame
 
 
 def connected_components(edges: DataFrame) -> DataFrame:
@@ -93,8 +94,8 @@ def canonical_mapping(
         sample = edges.take(limit + 1)
         if len(sample) <= limit:
             out = union_find_mapping([(r["src"], r["dst"]) for r in sample])
-            return edges.sparkSession.createDataFrame(
-                out or [], "node string, component string"
+            return local_frame(
+                edges.sparkSession, out, "node string, component string"
             )
     edges = edges.localCheckpoint(eager=True)
     comp = connected_components(edges)

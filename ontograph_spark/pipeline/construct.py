@@ -8,7 +8,8 @@ linking → canonicalization → graph materialize):
    ``ns#<kind>-sha256(key)`` — namespace + sha256 minting matching the
    reference's ``NewResourceTerm`` construction (triple.go:16-18): the
    final encoded term is ``<`` + minted URI + ``>``.
-2. **extract** — mention detection (extract.py, one Arrow stage).
+2. **extract** — mention detection (extract.py, one JVM projection:
+   a ``regexp_extract_all`` per grammar rule, no Python worker).
 3. **link** — broadcast dictionary scoring (link.py, no shuffle).
 4. **emit** — entity/edge triples as single-pass explode plans: each
    source row produces an array of (subj, pred, obj) structs that explodes
@@ -54,7 +55,7 @@ from ontograph_spark.pipeline.link import (
     same_as_pairs,
 )
 from ontograph_spark.store.base import QUAD_SCHEMA
-from ontograph_spark.terms import literal_term, mk_resource, resource_term
+from ontograph_spark.terms import literal_term, local_frame, mk_resource, resource_term
 
 DEFAULT_GRAPH = "https://ontograph.dev/code"
 
@@ -349,7 +350,7 @@ def schema_quads(spark: SparkSession, graph_uri: str) -> DataFrame:
             graph_uri,
         )
     )
-    return spark.createDataFrame(rows, QUAD_SCHEMA)
+    return local_frame(spark, rows, QUAD_SCHEMA)
 
 
 # -- orchestration ----------------------------------------------------------
@@ -471,8 +472,8 @@ def _construct(
             ]
             mapping_rows = union_find_mapping(edge_tuples)
             if mapping_rows:
-                mapping = spark.createDataFrame(
-                    mapping_rows, "node string, component string"
+                mapping = local_frame(
+                    spark, mapping_rows, "node string, component string"
                 )
                 module_branch = rewrite_terms(module_branch, mapping)
         else:

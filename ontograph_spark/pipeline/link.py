@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ontograph_spark.pipeline.repo_source import ALIASES, MODULES
+from ontograph_spark.terms import local_frame
 
 LINK_THRESHOLD = 0.5
 
@@ -34,7 +35,9 @@ def module_dictionary(spark: SparkSession) -> DataFrame:
     rows = [(m, m, 1.0) for m in MODULES] + [
         (a, c, 0.9) for a, c in ALIASES.items()
     ]
-    return spark.createDataFrame(rows, ["term", "canonical", "base_score"])
+    return local_frame(
+        spark, rows, "term string, canonical string, base_score double"
+    )
 
 
 def link_imports(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:

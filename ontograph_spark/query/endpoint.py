@@ -56,6 +56,7 @@ from ontograph_spark.ontology.resources import Triple
 from ontograph_spark.terms import (
     is_literal,
     is_resource,
+    local_frame,
     term_datatype,
     term_language,
     term_value,
@@ -200,7 +201,7 @@ class LocalSparqlEndpoint:
         collapse via ReuseExchange; the union is a plan, not a copy."""
         dfs = [s.df() for s in self._stores.values()]
         if not dfs:
-            return self.spark.createDataFrame([], QUAD_SCHEMA)
+            return local_frame(self.spark, [], QUAD_SCHEMA)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

@@ -216,6 +216,7 @@ from pyspark.sql import functions as F
 from ontograph_spark import vocab
 from ontograph_spark.functions.graph_algo import transitive_closure
 from ontograph_spark.terms import (
+    local_frame,
     term_datatype_col,
     term_language_col,
     term_value,
@@ -1760,6 +1761,13 @@ def _compile_path_pattern(
 # --------------------------------------------------------------------------
 
 
+def _bindings_frame(spark, names: list[str], rows) -> DataFrame:
+    """Solution rows computed on the driver (a VALUES block, a SERVICE
+    result) as a local relation with one string column per variable;
+    ``None`` cells are unbound."""
+    return local_frame(spark, rows, ", ".join(f"{n} string" for n in names))
+
+
 def _join_shared(
     left: DataFrame,
     right: DataFrame,
@@ -2493,11 +2501,7 @@ def _compile_group_nn(
             # on its variable columns; UNDEF cells are null ⇒ the vars
             # join with the unbound-compatibility rule like any
             # maybe-null variable
-            spark = quads.sparkSession
-            vdf = spark.createDataFrame(
-                [tuple(r) for r in rows],
-                ", ".join(f"{n} string" for n in names),
-            )
+            vdf = _bindings_frame(quads.sparkSession, names, rows)
             vnull = {
                 n
                 for i, n in enumerate(names)
@@ -2540,9 +2544,7 @@ def _compile_group_nn(
                 empty = quads.select(F.lit(True).alias("__exists__")).limit(0)
                 df = empty if df is None else df.limit(0)
                 continue
-            sdf = spark.createDataFrame(
-                rows, ", ".join(f"{n} string" for n in names)
-            )
+            sdf = _bindings_frame(spark, names, rows)
             nullable |= snull
             df = (
                 sdf
@@ -2920,10 +2922,7 @@ def _compile_select(
         # (SPARQL §18.2.4.3); joining pre-projection keeps a data block
         # over a non-projected variable a real constraint instead of a
         # silently-dropped cross join
-        spark = quads.sparkSession
-        vdf = spark.createDataFrame(
-            [tuple(r) for r in rows], ", ".join(f"{n} string" for n in names)
-        )
+        vdf = _bindings_frame(quads.sparkSession, names, rows)
         vnull = {
             n for i, n in enumerate(names) if any(r[i] is None for r in rows)
         }

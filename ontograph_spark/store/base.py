@@ -42,6 +42,7 @@ from ontograph_spark.errors import (
     TripleDoesNotExistError,
 )
 from ontograph_spark.ontology.resources import Triple
+from ontograph_spark.terms import local_frame
 
 #: Engine-wide fixed schema: the quad table.
 QUAD_SCHEMA = StructType(
@@ -115,7 +116,7 @@ class QuadStoreBase:
 
     def _triples_df(self, triples: Iterable[Triple]) -> DataFrame:
         rows = [(t.subject, t.predicate, t.object, self._uri) for t in triples]
-        return self.spark.createDataFrame(rows, QUAD_SCHEMA)
+        return local_frame(self.spark, rows, QUAD_SCHEMA)
 
     @staticmethod
     def _row_triple(row) -> Triple:

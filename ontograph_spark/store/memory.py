@@ -13,12 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ontograph_spark.store.base import QUAD_COLS, QUAD_SCHEMA, QuadStoreBase
+from ontograph_spark.terms import local_frame
 
 
 class MemoryQuadStore(QuadStoreBase):
     def __init__(self, spark: SparkSession, uri: str) -> None:
         super().__init__(spark, uri)
-        self._quads: DataFrame | None = spark.createDataFrame([], QUAD_SCHEMA)
+        self._quads: DataFrame | None = local_frame(spark, [], QUAD_SCHEMA)
 
     @classmethod
     def from_df(cls, spark: SparkSession, uri: str, quads: DataFrame) -> MemoryQuadStore:
@@ -41,7 +42,7 @@ class MemoryQuadStore(QuadStoreBase):
         rows = [(s, p, o, base) for s, p, o in triples]
         store._commit(
             "load",
-            added=spark.createDataFrame(rows, QUAD_SCHEMA).dropDuplicates(QUAD_COLS),
+            added=local_frame(spark, rows, QUAD_SCHEMA).dropDuplicates(QUAD_COLS),
         )
         return store
 

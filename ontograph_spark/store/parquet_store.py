@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ontograph_spark.store.base import QUAD_COLS, QUAD_SCHEMA, QuadStoreBase
+from ontograph_spark.terms import local_frame
 
 CURRENT_FILE = "CURRENT"
 SNAPSHOT_DIR = "snapshots"
@@ -154,7 +155,7 @@ class ParquetQuadStore(QuadStoreBase):
     def _df(self) -> DataFrame:
         cur = self.current_snapshot()
         if cur is None:
-            return self.spark.createDataFrame([], QUAD_SCHEMA)
+            return local_frame(self.spark, [], QUAD_SCHEMA)
         return self._read_snapshot(self._snapshot_path(cur))
 
     def _list_partitions(self, base: str) -> dict[tuple[str, int], str]:

@@ -8,20 +8,28 @@ computed on these exact strings.
 
 Every helper exists in two twin forms:
 
-* a **pure-Python** function (``mk_resource`` …) used driver-side, inside
-  pandas-UDF stages, and as the golden oracle in tests;
+* a **pure-Python** function (``mk_resource`` …) used driver-side and as
+  the golden oracle in tests;
 * a **Spark Column expression** (``resource_term`` …) built only from
   built-in ``pyspark.sql.functions`` so term work stays JVM-side inside
   whole-stage codegen — no Python in the distributed hot path.
 
 The two are golden-tested against each other and against the reference's
 test matrix (/root/reference/triple_test.go) in tests/test_terms.py.
+
+Terms built on the driver reach Spark through :func:`local_frame`, the one
+constructor of driver-built relations.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Iterable, Sequence
+
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # ---------------------------------------------------------------------------
 # Pure-Python twin (driver-side / pandas-UDF-side / golden oracle)
@@ -225,3 +233,30 @@ def term_datatype_col(term: Column | str) -> Column:
         (F.length(c) > 2) & (c.substr(1, 1) == '"') & c.contains('"^^'),
         term_value_col(tail),
     ).otherwise(F.lit(""))
+
+
+# ---------------------------------------------------------------------------
+# Driver-built relations
+# ---------------------------------------------------------------------------
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A relation built on the driver from positional ``rows`` in
+    ``schema``'s column order (a ``StructType`` or a DDL string).
+
+    The rows become a ``pyarrow.Table`` typed by the schema
+    (``to_arrow_schema``), which Spark plans as a ``LocalTableScan``: no
+    ``Scan ExistingRDD`` whose every task needs a Python worker to unpickle
+    its rows, and an exact size for the planner (a join against it can be
+    broadcast). Every driver-built relation of the engine goes through
+    here."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -187,6 +187,91 @@ def test_extract_matrix_spark_vs_python(spark, small_input):
     }
 
 
+#: contents where Java's regex dialect and Python's ``re`` part ways
+#: unless the rules are translated (extract.java_regex): line ends other
+#: than ``\n``, Python-only white space (U+001C-U+001F), marks and
+#: connector punctuation Java's ``\w`` takes, non-decimal numbers Java's
+#: Unicode ``\w`` drops, CJK names, Go import blocks with blank lines,
+#: and no final newline
+ADVERSARIAL = [
+    ("python", "import os\r\nimport sys\rimport re\r\n\r\nimport io"),
+    ("python", "import a\u0085import b\nimport c\u0085\nimport d\u2028"),
+    ("python", "import e\u2028import f\nimport g\u2029\nimport h\u00a0\n"),
+    ("python", "".join(f"import m{c}\ndef f{c}(x):\n" for c in "\x1c\x1d\x1e\x1f")),
+    ("python", "def f\u0301(x):\nclass K\u203f:\ndef g\u203fh(x):\nclass L:"),
+    ("python", "import \u00b2\nimport \u2160\ndef \u0663(x):\nclass x\u00b2\u2160\u0663:"),
+    ("python", "def 函数(x):\nimport 模块.子\nfrom 包 import 名\n# see repo:仓库-1"),
+    ("python", "from a.b import c \t\nfrom d import e.f\n# see repo:r-2\r\n"),
+    ("go", 'import (\n\t"fmt"\n\n\t"os"\n\n\n    "net.http"\r\n)\n'),
+    ("go", 'import (\n\x1c"a"\n\u00a0"b"\u0085\n\u2028"c"\n)\ntype T struct {}'),
+    ("go", "func Main(\ntype Ü struct\n// see repo:r_3\nfunc λ(x)"),
+    ("go", "package p\n\nfunc F() {}\n\ttype Inner struct"),
+]
+
+REPO_DDL = "repo string, path string, commit string, lang string, content string"
+
+
+def _extract_diff(spark, rows):
+    """The (repo, path, kind, name) rows where extract_mentions and the
+    Python oracle disagree, over ``(repo, path, commit, lang, content)``
+    input rows built as a local relation."""
+    from ontograph_spark.pipeline.extract import extract_mentions
+    from ontograph_spark.terms import local_frame
+
+    got = {
+        (r["repo"], r["path"], r["kind"], r["name"])
+        for r in extract_mentions(local_frame(spark, rows, REPO_DDL)).collect()
+    }
+    want = {
+        (repo, path, kind, name)
+        for repo, path, _, lang, content in rows
+        for kind, name in extract_mentions_py(lang, content)
+    }
+    return got ^ want, want
+
+
+def test_extract_adversarial_contents_match_python(spark):
+    rows = [
+        ("r", f"f{i}", "c", lang, content)
+        for i, (lang, content) in enumerate(ADVERSARIAL)
+    ]
+    diff, want = _extract_diff(spark, rows)
+    assert diff == set()
+    # the probes do hit matches in both languages, not just misses
+    assert {p for _, p, _, _ in want} == {f"f{i}" for i in range(len(rows))}
+
+
+def test_java_regex_translates_classes_and_rejects_other_escapes():
+    from ontograph_spark.pipeline.extract import java_regex
+
+    assert java_regex(r"^a\w[\w.\-]\s*$") == (
+        r"(?mdU)^a[\p{L}\p{N}_][\p{L}\p{N}_.\-][\s\x1c-\x1f]*$"
+    )
+    for untranslated in (r"\d", r"\b", r"\W", r"\S"):
+        with pytest.raises(ValueError):
+            java_regex(f"^x{untranslated}")
+
+
+def test_extract_bmp_sweep_matches_python_up_to_jvm_unassigned(spark):
+    """Every BMP code point in two templates (a ``\\w`` probe inside a
+    declaration, a ``\\w``/``\\s`` probe at an import's end). The only
+    disagreements allowed are code points the JVM's Unicode tables leave
+    unassigned (``Character.getType == 0``) while Python's newer tables
+    class them as letters or digits (SURVEY.md, mention extraction)."""
+    templates = ("def a{c}b(x):", "import a{c}")
+    rows = [
+        ("r", f"{t}:{cp}", "c", "python", tpl.format(c=chr(cp)))
+        for cp in range(0x10000)
+        if not 0xD800 <= cp <= 0xDFFF
+        for t, tpl in enumerate(templates)
+    ]
+    diff, want = _extract_diff(spark, rows)
+    assert len(want) > 90_000  # most code points are word characters
+    mismatched = {int(path.split(":")[1]) for _, path, _, _ in diff}
+    jvm_type = spark.sparkContext._jvm.java.lang.Character.getType
+    assert {cp for cp in mismatched if jvm_type(cp) != 0} == set()
+
+
 def test_pipeline_matches_oracle(spark, small_input):
     df, rows = small_input
     out = {
@@ -319,3 +404,50 @@ def test_canonical_mapping_distributed_path_runs_to_convergence(
     want = sorted(union_find_mapping(edges))
     assert len(want) == 20
     assert got == want
+
+
+#: Two constructions and writes of one input in a fresh process, printing
+#: the generated classes each one compiled (Spark's CodegenMetrics).
+_COMPILE_PROBE = """
+import sys, tempfile
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "8")
+         .config("spark.sql.codegen.useIdInClassName", "false")
+         .config("spark.ui.enabled", "false").getOrCreate())
+from ontograph_spark.pipeline.construct import constructed
+from ontograph_spark.pipeline.repo_source import REPO_SCHEMA, render_row
+from ontograph_spark.terms import local_frame
+jvm = spark.sparkContext._jvm
+compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+files = local_frame(spark, [render_row(i, 10) for i in range(150)], REPO_SCHEMA)
+out = tempfile.mkdtemp(dir=sys.argv[1])
+for i in range(2):
+    before = compiled.getCount()
+    with constructed(spark, files) as quads:
+        quads.write.parquet(f"{out}/kg{i}")
+    print("compiled", compiled.getCount() - before)
+spark.stop()
+"""
+
+
+def test_second_construction_compiles_no_classes(tmp_path):
+    """Nothing in a construction's generated code varies per call:
+    constructing and writing the same input again compiles nothing.
+    The probe turns off ``useIdInClassName``: adaptive execution may
+    renumber whole-stage codegen ids between calls, and with the id in
+    the class text Spark recompiles a few identical bodies per call."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    run = subprocess.run(
+        [sys.executable, "-c", _COMPILE_PROBE, str(tmp_path)],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    counts = [int(line.split()[1]) for line in run.stdout.splitlines()
+              if line.startswith("compiled ")]
+    assert len(counts) == 2 and counts[0] > 0, run.stdout
+    assert counts[1] == 0, counts

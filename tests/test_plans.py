@@ -505,3 +505,61 @@ class _no_broadcast:
 
     def __exit__(self, *a):
         self.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", self.prev)
+
+
+#: plan nodes that run Python: each needs a Python worker per task
+#: (``ExistingRDD`` is a relation built from a Python list, whose rows a
+#: worker unpickles)
+PYTHON_NODES = ("MapInPandas", "PythonUDF", "BatchEvalPython", "ArrowEvalPython", "ExistingRDD")
+
+
+def _python_nodes(plan: str) -> list[str]:
+    return [n for n in PYTHON_NODES if n in plan]
+
+
+def test_construct_kg_plan_runs_no_python(spark):
+    """Construction is JVM-side end to end: extraction is a regex
+    projection (``Generate inline`` over ``regexp_extract_all``), and the
+    schema quads, the module dictionary and the canonical mapping are
+    local relations."""
+    from ontograph_spark.pipeline.construct import construct_kg
+    from ontograph_spark.pipeline.repo_source import REPO_SCHEMA, render_row
+    from ontograph_spark.terms import local_frame
+
+    files = local_frame(spark, [render_row(i, 10) for i in range(150)], REPO_SCHEMA)
+    plan = plan_of(construct_kg(spark, files, G))
+    # the extraction and linking subtrees are in the string we inspect
+    assert "regexp_extract_all" in plan and "BroadcastHashJoin" in plan
+    assert "LocalTableScan" in plan
+    assert _python_nodes(plan) == []
+
+
+def test_values_and_insert_data_plans_build_no_rdd_from_a_list(
+    spark, tmp_path, monkeypatch
+):
+    """A SPARQL VALUES block and an INSERT DATA batch become local
+    relations (``LocalTableScan``), not ``Scan ExistingRDD``."""
+    from ontograph_spark.query import sparql_select
+    from ontograph_spark.query.endpoint import LocalSparqlEndpoint
+
+    store = ParquetQuadStore(spark, G, str(tmp_path / "q"))
+    added_plans = []
+    commit = ParquetQuadStore._commit
+
+    def spy(self, op, added=None, removed=None):
+        if added is not None:
+            added_plans.append(plan_of(added))
+        return commit(self, op, added=added, removed=removed)
+
+    monkeypatch.setattr(ParquetQuadStore, "_commit", spy)
+    ep = LocalSparqlEndpoint(spark, lambda uri: store)
+    ep.update(f"INSERT DATA {{ GRAPH <{G}> {{ <{G}#a> <{G}#rel> <{G}#b> }} }}")
+    assert len(added_plans) == 1
+    assert "LocalTableScan" in added_plans[0]
+    assert _python_nodes(added_plans[0]) == []
+
+    q = f"SELECT ?x ?y WHERE {{ VALUES ?x {{ <{G}#a> <{G}#c> }} ?x <{G}#rel> ?y }}"
+    df = sparql_select(store.df(), q)
+    assert "LocalTableScan" in plan_of(df)
+    assert _python_nodes(plan_of(df)) == []
+    assert [tuple(r) for r in df.collect()] == [(f"<{G}#a>", f"<{G}#b>")]

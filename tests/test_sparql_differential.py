@@ -32,6 +32,7 @@ from collections import Counter
 import pytest
 
 from ontograph_spark.query import sparql_select
+from ontograph_spark.terms import local_frame
 
 CASES = int(os.environ.get("SPARQL_DIFF_CASES", "60"))
 
@@ -49,11 +50,11 @@ def _quads(rng: random.Random) -> list[tuple[str, str, str]]:
     })
 
 
+QUAD_DDL = "subj string, pred string, obj string, graph string"
+
+
 def _df(spark, triples):
-    return spark.createDataFrame(
-        [(s, p, o, "g") for s, p, o in triples],
-        "subj string, pred string, obj string, graph string",
-    )
+    return local_frame(spark, [(s, p, o, "g") for s, p, o in triples], QUAD_DDL)
 
 
 def _slot(rng, pool):
@@ -788,9 +789,7 @@ def _gquads(rng):
 
 
 def _df_g(spark, quads):
-    return spark.createDataFrame(
-        list(quads), "subj string, pred string, obj string, graph string"
-    )
+    return local_frame(spark, quads, QUAD_DDL)
 
 
 def test_paths_under_graph_var_match_naive(spark):

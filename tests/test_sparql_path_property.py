@@ -19,6 +19,7 @@ from hypothesis import strategies as st
 
 from ontograph_spark.functions import graph_algo
 from ontograph_spark.query.sparql import _Parser, _compile_group
+from ontograph_spark.terms import local_frame
 
 NODES = ["<u:a>", "<u:b>", "<u:c>", "<u:d>"]
 PREDS = ["<u:p>", "<u:q>"]
@@ -123,7 +124,8 @@ def graph_terms(triples) -> set[str]:
 
 def _quads(spark, triples, graph="u:g"):
     rows = [(s, p, o, graph) for s, p, o in triples]
-    quads = spark.createDataFrame(
+    quads = local_frame(
+        spark,
         rows or [("<u:none>", "<u:none>", "<u:none>", "u:none")],
         "subj string, pred string, obj string, graph string",
     )

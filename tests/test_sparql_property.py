@@ -22,6 +22,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ontograph_spark.query.sparql import _Parser, _compile_group
+from ontograph_spark.terms import local_frame
 
 SUBJECTS = ["<u:a>", "<u:b>", "<u:c>"]
 PREDS = ["<u:p>", "<u:q>"]
@@ -77,6 +78,19 @@ def naive_bgp(triples, patterns):
     return solutions
 
 
+def _quads(spark, triples):
+    """The triples as graph ``u:g`` of a local quad relation."""
+    rows = [(s, p, o, "u:g") for s, p, o in triples]
+    quads = local_frame(
+        spark,
+        rows or [("<u:none>", "<u:none>", "<u:none>", "u:none")],
+        "subj string, pred string, obj string, graph string",
+    )
+    if not rows:
+        quads = quads.where("graph = 'u:g'")
+    return quads
+
+
 def to_query(patterns) -> str:
     def term(slot):
         kind, val = slot
@@ -93,13 +107,7 @@ def to_query(patterns) -> str:
 )
 @given(triples=triples_st, patterns=bgp_st)
 def test_bgp_matches_naive_unification(spark, triples, patterns):
-    rows = [(s, p, o, "u:g") for s, p, o in triples]
-    quads = spark.createDataFrame(
-        rows or [("<u:none>", "<u:none>", "<u:none>", "u:none")],
-        "subj string, pred string, obj string, graph string",
-    )
-    if not rows:
-        quads = quads.where("graph = 'u:g'")
+    quads = _quads(spark, triples)
     q = _Parser(to_query(patterns)).parse_query()
     df = _compile_group(quads, q.group)
     got = Counter(tuple(sorted(r.asDict().items())) for r in df.collect())
@@ -145,13 +153,7 @@ def naive_optional(triples, left, opt):
 @given(triples=triples_st, left=st.lists(pattern_st, min_size=1, max_size=2),
        opt=st.lists(pattern_st, min_size=1, max_size=2))
 def test_optional_matches_naive_leftjoin(spark, triples, left, opt):
-    rows = [(s, p, o, "u:g") for s, p, o in triples]
-    quads = spark.createDataFrame(
-        rows or [("<u:none>", "<u:none>", "<u:none>", "u:none")],
-        "subj string, pred string, obj string, graph string",
-    )
-    if not rows:
-        quads = quads.where("graph = 'u:g'")
+    quads = _quads(spark, triples)
     q = _Parser(to_optional_query(left, opt)).parse_query()
     df = _compile_group(quads, q.group)
     got = Counter(
@@ -182,13 +184,7 @@ def naive_leftjoin(lsol, rsol):
 
 
 def _run_group(spark, triples, query):
-    rows = [(s, p, o, "u:g") for s, p, o in triples]
-    quads = spark.createDataFrame(
-        rows or [("<u:none>", "<u:none>", "<u:none>", "u:none")],
-        "subj string, pred string, obj string, graph string",
-    )
-    if not rows:
-        quads = quads.where("graph = 'u:g'")
+    quads = _quads(spark, triples)
     q = _Parser(query).parse_query()
     df = _compile_group(quads, q.group)
     return Counter(
@@ -287,13 +283,7 @@ def test_union_matches_naive_bag_union(spark, triples, a, b):
     abody = " . ".join(" ".join(term(s) for s in pat) for pat in a)
     bbody = " . ".join(" ".join(term(s) for s in pat) for pat in b)
     query = f"SELECT * WHERE {{ {{ {abody} }} UNION {{ {bbody} }} }}"
-    rows = [(s, p, o, "u:g") for s, p, o in triples]
-    quads = spark.createDataFrame(
-        rows or [("<u:none>", "<u:none>", "<u:none>", "u:none")],
-        "subj string, pred string, obj string, graph string",
-    )
-    if not rows:
-        quads = quads.where("graph = 'u:g'")
+    quads = _quads(spark, triples)
     q = _Parser(query).parse_query()
     df = _compile_group(quads, q.group)
     got = Counter(

@@ -206,3 +206,18 @@ def test_column_constructors_agree_with_python(spark):
     for row in rows:
         assert row["res"] == terms.mk_resource(row["uri"])
         assert row["lit"] == terms.mk_literal(row["val"], row["lang"], row["dt"])
+
+
+def test_local_frame_is_a_typed_local_table_scan(spark):
+    """Rows keep their values and the schema's types and nullability,
+    no rows still carry the schema, and the plan leaf is a
+    ``LocalTableScan`` (no ``Scan ExistingRDD``)."""
+    from ontograph_spark.store.base import QUAD_SCHEMA
+
+    df = terms.local_frame(spark, [("a", 1, 0.5), ("b", None, None)], "s string, n bigint, x double")
+    assert [tuple(r) for r in df.collect()] == [("a", 1, 0.5), ("b", None, None)]
+    assert df.dtypes == [("s", "string"), ("n", "bigint"), ("x", "double")]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    empty = terms.local_frame(spark, [], QUAD_SCHEMA)
+    assert empty.schema == QUAD_SCHEMA and empty.count() == 0
